@@ -7,7 +7,6 @@ round loop. Defaults mirror the reference defaults where they exist.
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import asdict, dataclass, field
 
 from .urlkit import NORMAL, Budget
@@ -39,12 +38,6 @@ class CrawlConfig:
 
     max_rounds: int = 32
     user_agent: str = "atra-spark/0.1"
-
-    # politeness scheduler implementation: the JVM window function
-    # (default, whole-stage codegen) or the grouped applyInPandas
-    # stateful scheduler — identical admissions (pytest-verified),
-    # the pandas path also stamps per-host scheduled fetch offsets
-    use_pandas_scheduler: bool = False
 
     # write the order/edges audit tables (crawl-ordering parity + web
     # graph). Disable for pure-throughput runs; results/seen/frontier/
@@ -84,9 +77,7 @@ class CrawlConfig:
     # passes while 57 MB batches stream through DRAM (this box's
     # bandwidth anti-scales past ~8 cores and is often contended). Kept
     # as a knob because the tradeoff flips on cache-rich/calm hardware.
-    extract_arrow_batch: int = field(
-        default_factory=lambda: int(os.environ.get("ATRA_EXTRACT_ARROW_BATCH", "0"))
-    )
+    extract_arrow_batch: int = 0
 
     # AQE inside the round loop. The round's plan shapes are statically
     # partitioned and skew-guarded by construction — host-hash bucketed
@@ -99,9 +90,7 @@ class CrawlConfig:
     # Scoped: the engine flips spark.sql.adaptive.enabled only for the
     # duration of run_round and restores the session value after, so
     # analytics queries on the same session keep AQE (skew joins etc.).
-    aqe_in_round: bool = field(
-        default_factory=lambda: os.environ.get("ATRA_AQE_IN_ROUND", "0") == "1"
-    )
+    aqe_in_round: bool = False
 
     def budget_for(self, host: str) -> Budget:
         return self.per_host_budget.get(host, self.default_budget)
@@ -113,6 +102,11 @@ class CrawlConfig:
     @classmethod
     def from_json(cls, s: str) -> "CrawlConfig":
         d = json.loads(s)
+        # retired field: configs written while the engine still had a
+        # second (applyInPandas) admission path carry it, and cached
+        # corpora/fixtures outlive the code change. Only this key is
+        # forgiven; any other unknown key still raises.
+        d.pop("use_pandas_scheduler", None)
         d["default_budget"] = Budget(**d["default_budget"])
         d["per_host_budget"] = {k: Budget(**v) for k, v in d["per_host_budget"].items()}
         return cls(**d)

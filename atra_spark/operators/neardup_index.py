@@ -67,7 +67,6 @@ import math
 import os
 import re
 import shutil
-import tempfile
 from collections import OrderedDict
 
 import numpy as np
@@ -83,7 +82,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .seen_index import _cache_put, _default_storage
+from .seen_index import _atomic_write, _cache_put, _default_storage
 
 _FORMAT = "neardup-bands-v1"
 _BUCKET_COL = "__ndx_bucket"
@@ -504,10 +503,7 @@ class NearDupIndex:
             "k": self.k,
             "buckets": self._pending,
         }
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
+        _atomic_write(self._manifest_path(), json.dumps(manifest).encode())
         self._manifest = manifest
         self._pending = None
         self._pending_batch = None
@@ -592,10 +588,7 @@ class NearDupIndex:
             buckets[str(b)]["deltas"] = [base]
         manifest = dict(self._manifest)
         manifest["buckets"] = buckets
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
+        _atomic_write(self._manifest_path(), json.dumps(manifest).encode())
         self._manifest = manifest
         bands_re = re.compile(r"^bands(?:_base)?_b(\d+)\.parquet$")
         for b, _ch in work:

@@ -1,4 +1,5 @@
-"""Per-host politeness scheduler — grouped applyInPandas state.
+"""Per-host politeness admission: the engine's window function plus its
+grouped applyInPandas reference.
 
 The reference serializes fetches per origin with an exclusive host
 guard + a per-origin tokio interval (atra/src/url/guard/mod.rs:63-102,
@@ -14,10 +15,11 @@ Admission order within a host (the deterministic ordering parity
 definition of SURVEY.md §7): is_seed desc, enqueue_round asc, url asc
 (UrlWithDepth total order tie-break, url_with_depth.rs:194-264).
 
-A window-function variant (`admit_window`) computes the same admission
-JVM-side; equivalence is pytest-verified and the crawl loop uses it as
-the default fast path, keeping the applyInPandas scheduler for the
-stateful outputs (scheduled_offset_ms, per-host metrics).
+The crawl loop admits through the window-function variant
+(`admit_window`), which computes the same admission JVM-side in
+whole-stage codegen. ``schedule_hosts`` is not an engine path: it is
+the readable per-host reference that tests hold `admit_window` to
+(admitted, admission_index and scheduled_offset_ms must agree).
 """
 
 from __future__ import annotations
@@ -81,7 +83,7 @@ def schedule_hosts(
     round_budget_ms: int = 10_000,
     broadcast_robots: bool = True,
 ) -> DataFrame:
-    """The applyInPandas scheduler: one pandas group per host.
+    """The applyInPandas reference scheduler: one pandas group per host.
 
     Returns every input row tagged admitted/deferred; admitted rows get
     admission_index (0-based within host) and a scheduled fetch offset
@@ -118,7 +120,7 @@ def admit_window(
     "politeness budget window function"): row_number over
     (host | is_seed desc, enqueue_round, url) <= k(host).
 
-    Stays entirely in whole-stage codegen; used as the default engine
+    Stays entirely in whole-stage codegen; the engine's only admission
     path. Deferred rows carry admission_index -1.
     """
     with_delay = _with_delay(frontier, robots_parsed, default_delay_ms, broadcast_robots)

@@ -67,7 +67,6 @@ import json
 import os
 import re
 import shutil
-import tempfile
 import uuid
 from collections import OrderedDict
 
@@ -98,8 +97,8 @@ _KIND_COL = "_si_kind"
 # ---------------------------------------------------------------------------
 _BLOOM_CACHE: OrderedDict[str, np.ndarray] = OrderedDict()
 _HASHSET_CACHE: OrderedDict[str, tuple[tuple, np.ndarray, np.ndarray, np.ndarray]] = OrderedDict()
-_BLOOM_CACHE_CAP = int(os.environ.get("ATRA_SEEN_BLOOM_CACHE", "256"))
-_HASHSET_CACHE_CAP = int(os.environ.get("ATRA_SEEN_URLSET_CACHE", "64"))
+_BLOOM_CACHE_CAP = 256
+_HASHSET_CACHE_CAP = 64
 
 
 def _cache_put(cache: OrderedDict, cap: int, key, value) -> None:
@@ -601,10 +600,7 @@ class SeenIndex:
             "num_buckets": self.num_buckets,
             "buckets": self._pending,
         }
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path())
+        _atomic_write(self._manifest_path(), json.dumps(manifest).encode())
         self._manifest = manifest
         self._pending = None
         self._pending_round = None
@@ -707,10 +703,7 @@ class SeenIndex:
         for b, ds, bn, _bl in work:
             if len(ds) > 1:
                 self._manifest["buckets"][str(b)]["deltas"] = [bn]
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(self._manifest, f)
-        os.replace(tmp, self._manifest_path())
+        _atomic_write(self._manifest_path(), json.dumps(self._manifest).encode())
         hashes_re = re.compile(r"^hashes(?:_base)?_r(\d+)\.parquet$")
         for b, _ds, _bn, _bl in work:
             live = set(self._manifest["buckets"][str(b)].get("deltas", []))

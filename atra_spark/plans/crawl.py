@@ -16,8 +16,9 @@ Scale posture per round (10^10-frontier discipline, SURVEY.md §7):
 - the index is maintained incrementally (each round appends one delta
   per touched bucket; compaction every k rounds — no rebuild scans)
 - candidate aggregation is salted two-phase (hot hosts / hot URLs)
-- admission is a JVM window function; the applyInPandas scheduler is
-  the stateful variant (equivalence pytest-verified)
+- admission is one JVM window function (``admit_window``), kept in
+  whole-stage codegen; the applyInPandas ``schedule_hosts`` is the
+  tested reference it must agree with, not an engine path
 """
 
 from __future__ import annotations
@@ -50,7 +51,7 @@ from ..operators.frontier import (
     filter_state_indexed,
     parse_robots,
 )
-from ..operators.politeness import admit_window, schedule_hosts
+from ..operators.politeness import admit_window
 from ..operators.seen import aggregate_candidates
 
 
@@ -272,7 +273,7 @@ class CrawlEngine:
             self.spark.conf.set(_aqe_key, _prev_aqe)
 
     def _run_round_inner(self, rnd: int) -> RoundStats:
-        """One crawl round = one bounded set of Spark jobs (~7) and one
+        """One crawl round = one bounded set of Spark jobs and one
         checkpoint transaction.
 
         Scale/plan discipline:
@@ -285,16 +286,6 @@ class CrawlEngine:
         """
         spark, cfg = self.spark, self.config
         t0 = time.monotonic()
-        import os as _os
-
-        _timing = _os.environ.get("ATRA_PHASE_TIMING") == "1"
-        _last = [t0]
-
-        def _phase(name: str) -> None:
-            if _timing:
-                now = time.monotonic()
-                print(f"[phase] {name}: {now - _last[0]:.2f}s", flush=True)
-                _last[0] = now
         frontier = self.store.read_snapshot(spark, "frontier")
         assert frontier is not None, "seed() first"
         n_polled = self.store.count_rows("frontier") or 0
@@ -324,8 +315,7 @@ class CrawlEngine:
                 keep_delay=True,
             )
 
-        scheduler = schedule_hosts if cfg.use_pandas_scheduler else admit_window
-        sched = scheduler(
+        sched = admit_window(
             eligible,
             self.robots_parsed,
             default_delay_ms=cfg.delay_ms,
@@ -407,10 +397,7 @@ class CrawlEngine:
         # and every later consumer (misses, deferred, admission log,
         # host_state) reads it warm. The former explicit sched.count()
         # here was one whole extra Spark job per round for state the
-        # next job materializes anyway (round-6 fixed-cost diet); with
-        # it gone the "admission" phase marker times plan construction
-        # only and the window's execution is charged to results_write.
-        _phase("admission")
+        # next job materializes anyway (round-6 fixed-cost diet).
 
         # misses = admitted URLs with no page row (fetch-error analog ->
         # InternalError, crawler.rs:608-622) — computed from the url
@@ -507,7 +494,6 @@ class CrawlEngine:
         finally:
             if cfg.extract_arrow_batch:
                 spark.conf.set(_arrow_bs_key, _prev_bs)
-        _phase("results_write")
         res_read = spark.read.parquet(results_path)
 
         # ---- link expansion from the committed links column (columnar
@@ -516,15 +502,6 @@ class CrawlEngine:
 
         # salted two-phase dedup to unique candidates w/ lowest depth
         candidates = aggregate_candidates(expanded)
-
-        # diagnostic sub-phase timing (OFF in benchmarks: the caches +
-        # counts change the plan): localizes non-scaling stages inside
-        # the frontier_write interval
-        _timing_fine = _timing and _os.environ.get("ATRA_PHASE_TIMING_FINE") == "1"
-        if _timing_fine:
-            candidates = candidates.cache()
-            print(f"[fine] candidates={candidates.count()}", flush=True)
-            _phase("fw:expand+dedup")
 
         # ---- seen-set membership (the core operator): bucket-routed
         # bloom probe + exact confirm against the persistent SeenIndex.
@@ -550,10 +527,6 @@ class CrawlEngine:
             "url",
             "host",
         ).filter(F.col("host").isNotNull())
-        if _timing_fine:
-            new_urls = new_urls.cache()
-            new_urls.count()
-            _phase("fw:probe+origin")
 
         # ---- state transitions for this round (batch MERGE): one
         # branch over the committed results (fetched -> Processed,
@@ -591,7 +564,6 @@ class CrawlEngine:
         frontier_path = st.write_snapshot(
             "frontier", frontier_next, rnd + 1, bucket_by="host"
         )
-        _phase("frontier_write")
         new_from_snapshot = (
             spark.read.parquet(frontier_path)
             .filter(F.col("enqueue_round") == rnd + 1)
@@ -711,7 +683,6 @@ class CrawlEngine:
             self.seen_index.compact(spark)
             st.compact_table(spark, "seen", bucket_by="host")
             st.compact_table(spark, "host_state", bucket_by="host")
-        _phase("commit_pool")
 
         # driver-side stats from the tiny metrics snapshot (no Spark job)
         mt = st.read_small("metrics", rnd)

@@ -57,10 +57,7 @@ def get_spark(
         # this box's contended, anti-scaling DRAM. Small stays the
         # default; CrawlConfig.extract_arrow_batch can override the
         # extraction job per-stage on cache-rich hardware.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("ATRA_ARROW_BATCH", "512"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .config("spark.sql.parquet.filterPushdown", "true")
         # pages-scan split size: extraction is Python-CPU-heavy (~10-50x
         # a plain scan per byte), so scan tasks must be much smaller
@@ -75,10 +72,7 @@ def get_spark(
         # instead, which is faster here). Cluster deploys size executor
         # memory via spark-submit.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("ATRA_PARQUET_CODEC", "snappy"),
-        )
+        .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -38,10 +38,11 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.seen_index import _atomic_write
 
 # append-log tables: every round is live data (read via read_union) —
 # the snapshot-expiry maintenance MUST refuse them (plans/view.py
@@ -74,12 +75,8 @@ class CheckpointStore:
             return json.load(f)
 
     def _commit_manifest(self, table: str, manifest: dict) -> None:
-        d = os.path.join(self.root, table)
-        os.makedirs(d, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=d, suffix=".manifest.tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._manifest_path(table))  # atomic commit
+        os.makedirs(os.path.join(self.root, table), exist_ok=True)
+        _atomic_write(self._manifest_path(table), json.dumps(manifest).encode())
 
     # -- write -------------------------------------------------------------
     def write_snapshot(
@@ -91,20 +88,7 @@ class CheckpointStore:
         meta: dict | None = None,
     ) -> str:
         """Write one snapshot; optionally host-hash bucketed on write."""
-        path = os.path.join(self.root, table, f"r{round_no:05d}")
-        if bucket_by is not None:
-            df = df.repartition(
-                self.num_buckets, F.pmod(F.xxhash64(F.col(bucket_by)), F.lit(self.num_buckets))
-            )
-        df.write.mode("overwrite").parquet(path)
-        manifest = self._load_manifest(table)
-        manifest["snapshots"] = [s for s in manifest["snapshots"] if s["round"] != round_no]
-        manifest["snapshots"].append(
-            {"round": round_no, "path": path, "bucket_by": bucket_by, "meta": meta or {}}
-        )
-        manifest["snapshots"].sort(key=lambda s: s["round"])
-        self._commit_manifest(table, manifest)
-        return path
+        return self._write(table, df, round_no, bucket_by, meta, delta=False)
 
     def write_delta(
         self,
@@ -117,18 +101,31 @@ class CheckpointStore:
         """Commit one round's UPDATES only (merge-on-read delta). Reads
         compose base + delta chain through the table's combiner; cost
         of this write is O(|updates|), never O(|table|)."""
-        path = os.path.join(self.root, table, f"d{round_no:05d}")
+        return self._write(table, df, round_no, bucket_by, meta, delta=True)
+
+    def _write(
+        self,
+        table: str,
+        df: DataFrame,
+        round_no: int,
+        bucket_by: str | None,
+        meta: dict | None,
+        delta: bool,
+    ) -> str:
+        """Write the round's parquet, then replace the round's manifest
+        entry (a base ``r`` snapshot or a ``d`` delta) and commit."""
+        path = os.path.join(self.root, table, f"{'d' if delta else 'r'}{round_no:05d}")
         if bucket_by is not None:
             df = df.repartition(
                 self.num_buckets, F.pmod(F.xxhash64(F.col(bucket_by)), F.lit(self.num_buckets))
             )
         df.write.mode("overwrite").parquet(path)
+        entry = {"round": round_no, "path": path, "bucket_by": bucket_by, "meta": meta or {}}
+        if delta:
+            entry["kind"] = "delta"
         manifest = self._load_manifest(table)
         manifest["snapshots"] = [s for s in manifest["snapshots"] if s["round"] != round_no]
-        manifest["snapshots"].append(
-            {"round": round_no, "path": path, "bucket_by": bucket_by,
-             "meta": meta or {}, "kind": "delta"}
-        )
+        manifest["snapshots"].append(entry)
         manifest["snapshots"].sort(key=lambda s: s["round"])
         self._commit_manifest(table, manifest)
         return path

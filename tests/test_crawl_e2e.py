@@ -433,36 +433,6 @@ class TestRecrawl:
         assert stats2.admitted == 1 and stats2.fetched_ok == 1
 
 
-class TestPandasSchedulerPath:
-    """The applyInPandas politeness scheduler (north-star shape) must
-    reproduce the oracle exactly, like the window path."""
-
-    def test_full_parity_with_pandas_scheduler(
-        self, spark, fixture_set, fixture_paths, oracle, tmp_path_factory
-    ):
-        import dataclasses
-
-        from atra_spark.sources.store import CheckpointStore
-
-        cfg = dataclasses.replace(fixture_set.config, use_pandas_scheduler=True)
-        store = CheckpointStore(str(tmp_path_factory.mktemp("pands")), num_buckets=8)
-        eng = CrawlEngine(
-            spark, store, cfg, fixture_paths["pages"], fixture_paths["robots"], num_buckets=8
-        )
-        eng.run(seeds=fixture_set.seeds)
-        eng_seen = {r["url"]: r["kind"] for r in store.read_snapshot(spark, "seen").collect()}
-        assert eng_seen == {u: k for u, (k, _, _) in oracle.seen.items()}
-        eng_order = sorted(
-            (r["round"], r["host"], r["admission_index"], r["url"])
-            for r in store.read_union(spark, "order").collect()
-        )
-        assert eng_order == sorted(oracle.order)
-        # host_state table maintained (audit mode)
-        hs = store.read_snapshot(spark, "host_state")
-        assert hs is not None and hs.count() > 0
-        assert set(hs.columns) == {"host", "last_access", "crawl_delay_ms"}
-
-
 class TestFetchJoinFallback:
     """Above ``broadcast_fetch_max_urls`` admitted URLs the engine
     swaps the broadcast fetch join for a shuffled join (the broadcast
