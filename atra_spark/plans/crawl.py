@@ -322,391 +322,388 @@ class CrawlEngine:
             round_budget_ms=cfg.round_budget_ms,
             broadcast_robots=self._robots_broadcast,
         ).cache()
-
-        admitted = sched.filter(F.col("admitted"))
-        deferred = sched.filter(~F.col("admitted")).select(
-            "url",
-            "host",
-            "is_seed",
-            (F.col("age") + 1).alias("age"),
-            F.lit(True).alias("host_was_in_use"),
-            *DEPTH_COLS,
-            "enqueue_round",
-        )
-
-        # ---- admission log (ordering parity, SURVEY.md §7) ----
-        admission_log = admitted.select(
-            F.lit(rnd).alias("round"),
-            "host",
-            F.col("admission_index").cast("int"),
-            "url",
-        )
-
-        # ---- simulated fetch: broadcast the admitted rows (url + the
-        # crawl state the results rows need: host/is_seed/depth triple)
-        # into the pages scan (payloads never shuffle; misses =
-        # fetch-error analog -> InternalError, crawler.rs:608-622).
-        # ONE broadcast serves both the fetch semi-join and the results
-        # metadata: the admitted-side columns ride the join output
-        # through the extraction pass as passthrough columns, so the
-        # round never builds a SECOND driver-side hash relation of the
-        # admitted set (each build is serial driver wall — collect +
-        # relation build — that a 16-core leg pays at the same price as
-        # a 4-core leg). Above the configured threshold the broadcast
-        # itself would be multi-GB, so fall back to a shuffled join —
-        # n_polled (an upper bound on admissions) comes free from the
-        # frontier parquet footers ----
-        admitted_meta = admitted.select("url", "host", "is_seed", *DEPTH_COLS)
-        adm_side = admitted_meta
-        if n_polled <= cfg.broadcast_fetch_max_urls:
-            adm_side = F.broadcast(adm_side)
-        hit_pages = self.pages.join(adm_side, on="url", how="inner")
-
-        # ---- extraction (decode -> text -> links -> lang), map-side ----
-        respect_nofollow = cfg.respect_nofollow
-        aggressive = cfg.use_aggressive_extractors
-
-        def _extract(it):
-            return extract_pages_batch(
-                it, respect_nofollow=respect_nofollow, aggressive=aggressive
+        try:
+            admitted = sched.filter(F.col("admitted"))
+            deferred = sched.filter(~F.col("admitted")).select(
+                "url",
+                "host",
+                "is_seed",
+                (F.col("age") + 1).alias("age"),
+                F.lit(True).alias("host_was_in_use"),
+                *DEPTH_COLS,
+                "enqueue_round",
             )
 
-        from pyspark.sql.types import BooleanType, LongType, StringType, StructField
+            # ---- admission log (ordering parity, SURVEY.md §7) ----
+            admission_log = admitted.select(
+                F.lit(rnd).alias("round"),
+                "host",
+                F.col("admission_index").cast("int"),
+                "url",
+            )
 
-        from ..schemas import extracted_schema_with_passthrough
+            # ---- simulated fetch: broadcast the admitted rows (url + the
+            # crawl state the results rows need: host/is_seed/depth triple)
+            # into the pages scan (payloads never shuffle; misses =
+            # fetch-error analog -> InternalError, crawler.rs:608-622).
+            # ONE broadcast serves both the fetch semi-join and the results
+            # metadata: the admitted-side columns ride the join output
+            # through the extraction pass as passthrough columns, so the
+            # round never builds a SECOND driver-side hash relation of the
+            # admitted set (each build is serial driver wall — collect +
+            # relation build — that a 16-core leg pays at the same price as
+            # a 4-core leg). Above the configured threshold the broadcast
+            # itself would be multi-GB, so fall back to a shuffled join —
+            # n_polled (an upper bound on admissions) comes free from the
+            # frontier parquet footers ----
+            admitted_meta = admitted.select("url", "host", "is_seed", *DEPTH_COLS)
+            adm_side = admitted_meta
+            if n_polled <= cfg.broadcast_fetch_max_urls:
+                adm_side = F.broadcast(adm_side)
+            hit_pages = self.pages.join(adm_side, on="url", how="inner")
 
-        page_fields = {f.name: f for f in self.pages.schema.fields}
-        # passthrough order must match extract_pages_batch's canonical
-        # column order: pages metadata first, then the admitted row's
-        # crawl state
-        passthrough = [
-            page_fields[c]
-            for c in ("warc_ts", "status", "headers")
-            if c in page_fields
-        ] + [
-            StructField("host", StringType(), True),
-            StructField("is_seed", BooleanType(), True),
-            *[StructField(c, LongType(), True) for c in DEPTH_COLS],
-        ]
-        extracted = hit_pages.select(
-            "url", "warc_ts", "html", *self._page_meta,
-            "host", "is_seed", *DEPTH_COLS,
-        ).mapInPandas(_extract, extracted_schema_with_passthrough(passthrough))
-        # sched is cached (above); the FIRST consumer — the results
-        # write's broadcast build of the admitted set — fills the cache
-        # and every later consumer (misses, deferred, admission log,
-        # host_state) reads it warm. The former explicit sched.count()
-        # here was one whole extra Spark job per round for state the
-        # next job materializes anyway (round-6 fixed-cost diet).
+            # ---- extraction (decode -> text -> links -> lang), map-side ----
+            respect_nofollow = cfg.respect_nofollow
+            aggressive = cfg.use_aggressive_extractors
 
-        # misses = admitted URLs with no page row (fetch-error analog ->
-        # InternalError, crawler.rs:608-622) — computed from the url
-        # column alone (columnar-pruned scan), NOT from the extraction
-        # output, so extraction stays a single pass
-        misses = admitted.join(self.pages.select("url"), on="url", how="left_anti")
+            def _extract(it):
+                return extract_pages_batch(
+                    it, respect_nofollow=respect_nofollow, aggressive=aggressive
+                )
 
-        # ---- results rows (single extraction pass, links included —
-        # CrawlResult carries its outlinks in the reference too,
-        # result.rs:32-90; the frontier path re-reads the committed
-        # links column columnar-pruned instead of caching ~1 GB of
-        # extraction output in executor memory) ----
-        empty_map = F.create_map().cast("map<string,string>")
-        links_type = "array<struct<url:string,kind:string,method:string,host:string>>"
-        status_expr = (
-            F.coalesce(F.col("status"), F.lit(200))
-            if "status" in extracted.columns
-            else F.lit(200)
-        )
-        headers_expr = (
-            F.coalesce(F.col("headers"), empty_map)
-            if "headers" in extracted.columns
-            else empty_map
-        )
-        # results rows carry the crawl state of their OWN admission —
-        # host + is_seed + the three depth longs — passed through the
-        # fetch join and the extraction batch (passthrough columns), so
-        # every downstream consumer (link expansion, state transitions)
-        # reads them from the committed snapshot and the round builds
-        # NO second hash relation of the admitted set. At 10^10-frontier
-        # scale the admitted set is millions of rows per round:
-        # rebuilding it as a driver-side broadcast is a serial stage
-        # the plan doesn't need (20 extra bytes per results row does
-        # the same job shuffle-free AND join-free).
-        results = extracted.select(
-            "url",
-            "host",
-            "is_seed",
-            *DEPTH_COLS,
-            F.lit(rnd).alias("fetched_round"),
-            F.col("warc_ts").alias("fetched_at"),
-            status_expr.cast("int").alias("status"),
-            headers_expr.alias("headers"),
-            F.lit(None).cast("string").alias("redirect"),
-            "format",
-            "encoding",
-            "had_decode_errors",
-            "lang",
-            "lang_confidence",
-            "text",
-            F.size(F.filter("links", lambda l: l["kind"] != "data")).alias("n_links"),
-            F.lit(True).alias("fetched"),
-            F.col("links").cast(links_type).alias("links"),
-        )
-        miss_results = misses.select(
-            "url",
-            "host",
-            "is_seed",
-            *DEPTH_COLS,
-            F.lit(rnd).alias("fetched_round"),
-            F.lit(None).cast("timestamp").alias("fetched_at"),
-            F.lit(404).alias("status"),
-            F.create_map().cast("map<string,string>").alias("headers"),
-            F.lit(None).cast("string").alias("redirect"),
-            F.lit(None).cast("string").alias("format"),
-            F.lit(None).cast("string").alias("encoding"),
-            F.lit(None).cast("boolean").alias("had_decode_errors"),
-            F.lit(None).cast("string").alias("lang"),
-            F.lit(None).cast("double").alias("lang_confidence"),
-            F.lit(None).cast("string").alias("text"),
-            F.lit(0).alias("n_links"),
-            F.lit(False).alias("fetched"),
-            F.array().cast(links_type).alias("links"),
-        )
+            from pyspark.sql.types import BooleanType, LongType, StringType, StructField
 
-        # ---- commit the results snapshot: THE single extraction pass
-        # of the round (scan -> decode -> extract -> write; nothing
-        # cached, nothing computed twice). This job streams the full
-        # page payload through the Python extractor, so it runs with
-        # the LARGE Arrow batch size (config.extract_arrow_batch — the
-        # per-batch JVM<->Python round-trip is ~45 ms regardless of
-        # size) while every other pandas stage keeps the small session
-        # default; the conf is runtime-scoped per action, restored
-        # before the frontier path ----
-        st = self.store
-        _arrow_bs_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-        _prev_bs = spark.conf.get(_arrow_bs_key)
-        if cfg.extract_arrow_batch:
-            spark.conf.set(_arrow_bs_key, str(cfg.extract_arrow_batch))
-        try:
-            results_path = st.write_snapshot(
-                "results", results.unionByName(miss_results), rnd
+            from ..schemas import extracted_schema_with_passthrough
+
+            page_fields = {f.name: f for f in self.pages.schema.fields}
+            # passthrough order must match extract_pages_batch's canonical
+            # column order: pages metadata first, then the admitted row's
+            # crawl state
+            passthrough = [
+                page_fields[c]
+                for c in ("warc_ts", "status", "headers")
+                if c in page_fields
+            ] + [
+                StructField("host", StringType(), True),
+                StructField("is_seed", BooleanType(), True),
+                *[StructField(c, LongType(), True) for c in DEPTH_COLS],
+            ]
+            extracted = hit_pages.select(
+                "url", "warc_ts", "html", *self._page_meta,
+                "host", "is_seed", *DEPTH_COLS,
+            ).mapInPandas(_extract, extracted_schema_with_passthrough(passthrough))
+            # sched is cached (above); the FIRST consumer — the results
+            # write's broadcast build of the admitted set — fills the cache
+            # and every later consumer (misses, deferred, admission log,
+            # host_state) reads it warm. The former explicit sched.count()
+            # here was one whole extra Spark job per round for state the
+            # next job materializes anyway (round-6 fixed-cost diet).
+
+            # misses = admitted URLs with no page row (fetch-error analog ->
+            # InternalError, crawler.rs:608-622) — computed from the url
+            # column alone (columnar-pruned scan), NOT from the extraction
+            # output, so extraction stays a single pass
+            misses = admitted.join(self.pages.select("url"), on="url", how="left_anti")
+
+            # ---- results rows (single extraction pass, links included —
+            # CrawlResult carries its outlinks in the reference too,
+            # result.rs:32-90; the frontier path re-reads the committed
+            # links column columnar-pruned instead of caching ~1 GB of
+            # extraction output in executor memory) ----
+            empty_map = F.create_map().cast("map<string,string>")
+            links_type = "array<struct<url:string,kind:string,method:string,host:string>>"
+            status_expr = (
+                F.coalesce(F.col("status"), F.lit(200))
+                if "status" in extracted.columns
+                else F.lit(200)
+            )
+            headers_expr = (
+                F.coalesce(F.col("headers"), empty_map)
+                if "headers" in extracted.columns
+                else empty_map
+            )
+            # results rows carry the crawl state of their OWN admission —
+            # host + is_seed + the three depth longs — passed through the
+            # fetch join and the extraction batch (passthrough columns), so
+            # every downstream consumer (link expansion, state transitions)
+            # reads them from the committed snapshot and the round builds
+            # NO second hash relation of the admitted set. At 10^10-frontier
+            # scale the admitted set is millions of rows per round:
+            # rebuilding it as a driver-side broadcast is a serial stage
+            # the plan doesn't need (20 extra bytes per results row does
+            # the same job shuffle-free AND join-free).
+            results = extracted.select(
+                "url",
+                "host",
+                "is_seed",
+                *DEPTH_COLS,
+                F.lit(rnd).alias("fetched_round"),
+                F.col("warc_ts").alias("fetched_at"),
+                status_expr.cast("int").alias("status"),
+                headers_expr.alias("headers"),
+                F.lit(None).cast("string").alias("redirect"),
+                "format",
+                "encoding",
+                "had_decode_errors",
+                "lang",
+                "lang_confidence",
+                "text",
+                F.size(F.filter("links", lambda l: l["kind"] != "data")).alias("n_links"),
+                F.lit(True).alias("fetched"),
+                F.col("links").cast(links_type).alias("links"),
+            )
+            miss_results = misses.select(
+                "url",
+                "host",
+                "is_seed",
+                *DEPTH_COLS,
+                F.lit(rnd).alias("fetched_round"),
+                F.lit(None).cast("timestamp").alias("fetched_at"),
+                F.lit(404).alias("status"),
+                F.create_map().cast("map<string,string>").alias("headers"),
+                F.lit(None).cast("string").alias("redirect"),
+                F.lit(None).cast("string").alias("format"),
+                F.lit(None).cast("string").alias("encoding"),
+                F.lit(None).cast("boolean").alias("had_decode_errors"),
+                F.lit(None).cast("string").alias("lang"),
+                F.lit(None).cast("double").alias("lang_confidence"),
+                F.lit(None).cast("string").alias("text"),
+                F.lit(0).alias("n_links"),
+                F.lit(False).alias("fetched"),
+                F.array().cast(links_type).alias("links"),
+            )
+
+            # ---- commit the results snapshot: THE single extraction pass
+            # of the round (scan -> decode -> extract -> write; nothing
+            # cached, nothing computed twice). This job streams the full
+            # page payload through the Python extractor; by default it
+            # keeps the session's 512-row Arrow batches. A nonzero
+            # config.extract_arrow_batch overrides the batch size for
+            # this action only, restored before the frontier path ----
+            st = self.store
+            _arrow_bs_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+            _prev_bs = spark.conf.get(_arrow_bs_key)
+            if cfg.extract_arrow_batch:
+                spark.conf.set(_arrow_bs_key, str(cfg.extract_arrow_batch))
+            try:
+                st.write_snapshot("results", results.unionByName(miss_results), rnd)
+            finally:
+                if cfg.extract_arrow_batch:
+                    spark.conf.set(_arrow_bs_key, _prev_bs)
+            res_read = st.read_snapshot(spark, "results", rnd)
+
+            # ---- link expansion from the committed links column (columnar
+            # pruning: only url + depth triple + links are read back) ----
+            edges, expanded = expand_links(res_read, rnd)
+
+            # salted two-phase dedup to unique candidates w/ lowest depth
+            candidates = aggregate_candidates(expanded)
+
+            # ---- seen-set membership (the core operator): bucket-routed
+            # bloom probe + exact confirm against the persistent SeenIndex.
+            # The seen TABLE is not shuffled at all here — each task reads
+            # only its bucket's bitmap (and, on bloom hits, that bucket's
+            # hash-pair delta chain) from the store. aligned=True: the
+            # candidate agg above already hash-partitions by url with
+            # P == num_buckets, which IS the index's bucket routing
+            # (pmod(hash(url), B)), so the probe adds ZERO exchange — the
+            # whole expand->dedup->seen-filter path is one shuffle ----
+            # origin via the JVM PSL plan (label slicing + per-depth
+            # broadcast joins, functions/jvm_url.py) — equivalence to the
+            # Python kernel is pinned by test_origin_matches_kernel /
+            # test_fixture_corpus_origin_parity. The former pandas UDF here
+            # was the frontier chain's only remaining Python stage after
+            # the probe: a second JVM<->Arrow round trip over every
+            # surviving URL, ~2 s of non-scaling wall per round at 480k
+            # pages. Broadcast joins preserve the probe's bucket-aligned
+            # partitioning (no exchange added).
+            new_urls = attach_origin(
+                self.seen_index.prune_new(candidates, aligned=self._probe_aligned),
+                spark,
+                "url",
+                "host",
+            ).filter(F.col("host").isNotNull())
+
+            # ---- state transitions for this round (batch MERGE): one
+            # branch over the committed results (fetched -> Processed,
+            # miss -> InternalError) ----
+            fetch_updates = res_read.select(
+                "url",
+                "host",
+                F.when(F.col("fetched"), F.lit(KIND_PROCESSED_AND_STORED))
+                .otherwise(F.lit(KIND_INTERNAL_ERROR))
+                .alias("kind"),
+                F.lit(254).alias("last_significant_kind"),
+                F.lit(False).alias("recrawl"),
+                "is_seed",
+                F.current_timestamp().alias("ts"),
+                *DEPTH_COLS,
+            )
+            # ---- next frontier = deferred + newly discovered ----
+            new_frontier = new_urls.select(
+                "url",
+                "host",
+                F.lit(False).alias("is_seed"),
+                F.lit(0).alias("age"),
+                F.lit(False).alias("host_was_in_use"),
+                *DEPTH_COLS,
+                F.lit(rnd + 1).alias("enqueue_round"),
+            )
+            frontier_next = deferred.unionByName(new_frontier)
+            if cooldown_deferred is not None:
+                frontier_next = frontier_next.unionByName(cooldown_deferred)
+
+            # ---- commit the rest of the round: the frontier snapshot
+            # materializes the link-expansion + bloom-anti-join path exactly
+            # once; every later consumer of "new URLs" reads the committed
+            # snapshot instead ----
+            st.write_snapshot("frontier", frontier_next, rnd + 1, bucket_by="host")
+            fr_read = st.read_snapshot(spark, "frontier", rnd + 1)
+            new_from_snapshot = (
+                fr_read
+                .filter(F.col("enqueue_round") == rnd + 1)
+                .select("url", "host", *DEPTH_COLS)
+            )
+            new_seen = new_from_snapshot.select(
+                "url",
+                "host",
+                F.lit(KIND_DISCOVERED).alias("kind"),
+                F.lit(254).alias("last_significant_kind"),
+                F.lit(False).alias("recrawl"),
+                F.lit(False).alias("is_seed"),
+                F.current_timestamp().alias("ts"),
+                *DEPTH_COLS,
+            )
+            # merge-on-read: commit ONLY this round's updates as a seen
+            # delta (O(|updates|) write, never a full seen rewrite); reads
+            # compose the chain via compose_seen and compaction below burns
+            # it into a new base every k rounds
+            updates = fetch_updates.unionByName(new_seen)
+
+            from concurrent.futures import ThreadPoolExecutor
+
+            jobs = {
+                "seen": lambda: st.write_delta("seen", updates, rnd + 1, bucket_by="host"),
+            }
+            # host_state (recrawl_management/mod.rs:27-70) is ALWAYS
+            # maintained — the recrawl-cooldown admission predicate consults
+            # it. Merge-on-read: commit ONLY this round's touched hosts as
+            # a delta (O(round hosts) write, never a full-table
+            # read+rewrite); reads fold max-by-host via compose_host_state
+            # and compaction below burns the fold into a new base.
+            host_state_now = admitted.groupBy("host").agg(
+                F.max("scheduled_offset_ms").alias("last_offset_ms"),
+                F.max("crawl_delay_ms").alias("crawl_delay_ms"),
+            ).select(
+                "host",
+                F.timestamp_millis(
+                    F.unix_millis(F.current_timestamp()) + F.col("last_offset_ms")
+                ).alias("last_access"),
+                "crawl_delay_ms",
+            )
+            jobs["host_state"] = lambda: st.write_delta(
+                "host_state", host_state_now, rnd + 1, bucket_by="host"
+            )
+            if cfg.audit_tables:
+                jobs["edges"] = lambda: st.write_snapshot("edges", edges, rnd + 1)
+                jobs["order"] = lambda: st.write_snapshot("order", admission_log, rnd)
+
+            # ---- per-bucket metrics from the committed snapshots (lineage,
+            # north rule) — one light aggregation over written files; runs
+            # INSIDE the concurrent commit pool (it reads the results/
+            # frontier parquet written above, independent of the other
+            # writes) ----
+            bucket = F.pmod(F.xxhash64(F.col("host")), F.lit(self.num_buckets)).cast("int")
+            r_agg = (
+                res_read
+                .select("host", "status", "n_links")
+                .withColumn("bucket", bucket)
+                .groupBy("bucket")
+                .agg(
+                    F.count("*").alias("admitted"),
+                    F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("fetched_ok"),
+                    F.sum(F.when(F.col("status") != 200, 1).otherwise(0)).alias("fetch_errors"),
+                    F.sum("n_links").alias("links_extracted"),
+                )
+            )
+            f_agg = (
+                fr_read
+                .select("host", "enqueue_round")
+                .withColumn("bucket", bucket)
+                .groupBy("bucket")
+                .agg(
+                    F.sum(F.when(F.col("enqueue_round") <= rnd, 1).otherwise(0)).alias("deferred"),
+                    F.sum(F.when(F.col("enqueue_round") == rnd + 1, 1).otherwise(0)).alias("new_urls"),
+                )
+            )
+            wall = int((time.monotonic() - t0) * 1000)
+            metrics = (
+                r_agg.join(f_agg, on="bucket", how="full_outer")
+                .select(
+                    F.lit(rnd).alias("round"),
+                    "bucket",
+                    F.lit(n_polled).cast("long").alias("polled"),
+                    F.coalesce(F.col("admitted"), F.lit(0)).cast("long").alias("admitted"),
+                    F.coalesce(F.col("deferred"), F.lit(0)).cast("long").alias("deferred"),
+                    F.coalesce(F.col("fetched_ok"), F.lit(0)).cast("long").alias("fetched_ok"),
+                    F.coalesce(F.col("fetch_errors"), F.lit(0)).cast("long").alias("fetch_errors"),
+                    F.coalesce(F.col("links_extracted"), F.lit(0)).cast("long").alias("links_extracted"),
+                    F.coalesce(F.col("new_urls"), F.lit(0)).cast("long").alias("new_urls"),
+                    F.lit(wall).cast("long").alias("wall_ms"),
+                )
+            )
+            # ~num_buckets rows total: coalesce to one output file (the
+            # partial aggregations upstream stay parallel; only the final
+            # 32-row reduce collapses) — the driver reads this snapshot
+            # back every round via pyarrow, and 32 near-empty parquet
+            # files per round were pure file-op overhead (round 6)
+            jobs["metrics"] = lambda: st.write_snapshot("metrics", metrics.coalesce(1), rnd)
+            # incremental seen-index maintenance indexes this round's full
+            # state delta — the newly discovered URLs (Discovered) AND the
+            # fetch transitions (Processed/InternalError), both read from
+            # committed snapshots — so the index can serve the next round's
+            # dequeue state check without touching the seen table. Rides
+            # the concurrent pool; the index manifest is only published
+            # AFTER the pool succeeds.
+            jobs["seen_index"] = lambda: self.seen_index.add_urls(
+                updates.select("url", "kind"), rnd + 1
+            )
+            with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+                futs = {k: pool.submit(fn) for k, fn in jobs.items()}
+                for f in futs.values():
+                    f.result()
+            self.seen_index.commit()
+            if self.config.seen_compact_every and (rnd + 1) % self.config.seen_compact_every == 0:
+                # distributed: one executor task per bucket via the storage seam
+                self.seen_index.compact(spark)
+                st.compact_table(spark, "seen", bucket_by="host")
+                st.compact_table(spark, "host_state", bucket_by="host")
+
+            # driver-side stats from the tiny metrics snapshot (no Spark job)
+            mt = st.read_small("metrics", rnd)
+            sums = {
+                c: sum(mt.column(c).to_pylist()) if mt is not None and mt.num_rows else 0
+                for c in (
+                    "admitted", "deferred", "fetched_ok", "fetch_errors",
+                    "links_extracted", "new_urls",
+                )
+            }
+
+            return RoundStats(
+                rnd,
+                n_polled,
+                sums["admitted"],
+                sums["deferred"],
+                sums["fetched_ok"],
+                sums["fetch_errors"],
+                sums["links_extracted"],
+                sums["new_urls"],
+                int((time.monotonic() - t0) * 1000),
             )
         finally:
-            if cfg.extract_arrow_batch:
-                spark.conf.set(_arrow_bs_key, _prev_bs)
-        res_read = spark.read.parquet(results_path)
-
-        # ---- link expansion from the committed links column (columnar
-        # pruning: only url + depth triple + links are read back) ----
-        edges, expanded = expand_links(res_read, rnd)
-
-        # salted two-phase dedup to unique candidates w/ lowest depth
-        candidates = aggregate_candidates(expanded)
-
-        # ---- seen-set membership (the core operator): bucket-routed
-        # bloom probe + exact confirm against the persistent SeenIndex.
-        # The seen TABLE is not shuffled at all here — each task reads
-        # only its bucket's bitmap (and, on bloom hits, that bucket's
-        # hash-pair delta chain) from the store. aligned=True: the
-        # candidate agg above already hash-partitions by url with
-        # P == num_buckets, which IS the index's bucket routing
-        # (pmod(hash(url), B)), so the probe adds ZERO exchange — the
-        # whole expand->dedup->seen-filter path is one shuffle ----
-        # origin via the JVM PSL plan (label slicing + per-depth
-        # broadcast joins, functions/jvm_url.py) — equivalence to the
-        # Python kernel is pinned by test_origin_matches_kernel /
-        # test_fixture_corpus_origin_parity. The former pandas UDF here
-        # was the frontier chain's only remaining Python stage after
-        # the probe: a second JVM<->Arrow round trip over every
-        # surviving URL, ~2 s of non-scaling wall per round at 480k
-        # pages. Broadcast joins preserve the probe's bucket-aligned
-        # partitioning (no exchange added).
-        new_urls = attach_origin(
-            self.seen_index.prune_new(candidates, aligned=self._probe_aligned),
-            spark,
-            "url",
-            "host",
-        ).filter(F.col("host").isNotNull())
-
-        # ---- state transitions for this round (batch MERGE): one
-        # branch over the committed results (fetched -> Processed,
-        # miss -> InternalError) ----
-        fetch_updates = res_read.select(
-            "url",
-            "host",
-            F.when(F.col("fetched"), F.lit(KIND_PROCESSED_AND_STORED))
-            .otherwise(F.lit(KIND_INTERNAL_ERROR))
-            .alias("kind"),
-            F.lit(254).alias("last_significant_kind"),
-            F.lit(False).alias("recrawl"),
-            "is_seed",
-            F.current_timestamp().alias("ts"),
-            *DEPTH_COLS,
-        )
-        # ---- next frontier = deferred + newly discovered ----
-        new_frontier = new_urls.select(
-            "url",
-            "host",
-            F.lit(False).alias("is_seed"),
-            F.lit(0).alias("age"),
-            F.lit(False).alias("host_was_in_use"),
-            *DEPTH_COLS,
-            F.lit(rnd + 1).alias("enqueue_round"),
-        )
-        frontier_next = deferred.unionByName(new_frontier)
-        if cooldown_deferred is not None:
-            frontier_next = frontier_next.unionByName(cooldown_deferred)
-
-        # ---- commit the rest of the round: the frontier snapshot
-        # materializes the link-expansion + bloom-anti-join path exactly
-        # once; every later consumer of "new URLs" reads the committed
-        # snapshot instead ----
-        frontier_path = st.write_snapshot(
-            "frontier", frontier_next, rnd + 1, bucket_by="host"
-        )
-        new_from_snapshot = (
-            spark.read.parquet(frontier_path)
-            .filter(F.col("enqueue_round") == rnd + 1)
-            .select("url", "host", *DEPTH_COLS)
-        )
-        new_seen = new_from_snapshot.select(
-            "url",
-            "host",
-            F.lit(KIND_DISCOVERED).alias("kind"),
-            F.lit(254).alias("last_significant_kind"),
-            F.lit(False).alias("recrawl"),
-            F.lit(False).alias("is_seed"),
-            F.current_timestamp().alias("ts"),
-            *DEPTH_COLS,
-        )
-        # merge-on-read: commit ONLY this round's updates as a seen
-        # delta (O(|updates|) write, never a full seen rewrite); reads
-        # compose the chain via compose_seen and compaction below burns
-        # it into a new base every k rounds
-        updates = fetch_updates.unionByName(new_seen)
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        jobs = {
-            "seen": lambda: st.write_delta("seen", updates, rnd + 1, bucket_by="host"),
-        }
-        # host_state (recrawl_management/mod.rs:27-70) is ALWAYS
-        # maintained — the recrawl-cooldown admission predicate consults
-        # it. Merge-on-read: commit ONLY this round's touched hosts as
-        # a delta (O(round hosts) write, never a full-table
-        # read+rewrite); reads fold max-by-host via compose_host_state
-        # and compaction below burns the fold into a new base.
-        host_state_now = admitted.groupBy("host").agg(
-            F.max("scheduled_offset_ms").alias("last_offset_ms"),
-            F.max("crawl_delay_ms").alias("crawl_delay_ms"),
-        ).select(
-            "host",
-            F.timestamp_millis(
-                F.unix_millis(F.current_timestamp()) + F.col("last_offset_ms")
-            ).alias("last_access"),
-            "crawl_delay_ms",
-        )
-        jobs["host_state"] = lambda: st.write_delta(
-            "host_state", host_state_now, rnd + 1, bucket_by="host"
-        )
-        if cfg.audit_tables:
-            jobs["edges"] = lambda: st.write_snapshot("edges", edges, rnd + 1)
-            jobs["order"] = lambda: st.write_snapshot("order", admission_log, rnd)
-
-        # ---- per-bucket metrics from the committed snapshots (lineage,
-        # north rule) — one light aggregation over written files; runs
-        # INSIDE the concurrent commit pool (it reads the results/
-        # frontier parquet written above, independent of the other
-        # writes) ----
-        bucket = F.pmod(F.xxhash64(F.col("host")), F.lit(self.num_buckets)).cast("int")
-        r_agg = (
-            spark.read.parquet(results_path)
-            .select("host", "status", "n_links")
-            .withColumn("bucket", bucket)
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("admitted"),
-                F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("fetched_ok"),
-                F.sum(F.when(F.col("status") != 200, 1).otherwise(0)).alias("fetch_errors"),
-                F.sum("n_links").alias("links_extracted"),
-            )
-        )
-        f_agg = (
-            spark.read.parquet(frontier_path)
-            .select("host", "enqueue_round")
-            .withColumn("bucket", bucket)
-            .groupBy("bucket")
-            .agg(
-                F.sum(F.when(F.col("enqueue_round") <= rnd, 1).otherwise(0)).alias("deferred"),
-                F.sum(F.when(F.col("enqueue_round") == rnd + 1, 1).otherwise(0)).alias("new_urls"),
-            )
-        )
-        wall = int((time.monotonic() - t0) * 1000)
-        metrics = (
-            r_agg.join(f_agg, on="bucket", how="full_outer")
-            .select(
-                F.lit(rnd).alias("round"),
-                "bucket",
-                F.lit(n_polled).cast("long").alias("polled"),
-                F.coalesce(F.col("admitted"), F.lit(0)).cast("long").alias("admitted"),
-                F.coalesce(F.col("deferred"), F.lit(0)).cast("long").alias("deferred"),
-                F.coalesce(F.col("fetched_ok"), F.lit(0)).cast("long").alias("fetched_ok"),
-                F.coalesce(F.col("fetch_errors"), F.lit(0)).cast("long").alias("fetch_errors"),
-                F.coalesce(F.col("links_extracted"), F.lit(0)).cast("long").alias("links_extracted"),
-                F.coalesce(F.col("new_urls"), F.lit(0)).cast("long").alias("new_urls"),
-                F.lit(wall).cast("long").alias("wall_ms"),
-            )
-        )
-        # ~num_buckets rows total: coalesce to one output file (the
-        # partial aggregations upstream stay parallel; only the final
-        # 32-row reduce collapses) — the driver reads this snapshot
-        # back every round via pyarrow, and 32 near-empty parquet
-        # files per round were pure file-op overhead (round 6)
-        jobs["metrics"] = lambda: st.write_snapshot("metrics", metrics.coalesce(1), rnd)
-        # incremental seen-index maintenance indexes this round's full
-        # state delta — the newly discovered URLs (Discovered) AND the
-        # fetch transitions (Processed/InternalError), both read from
-        # committed snapshots — so the index can serve the next round's
-        # dequeue state check without touching the seen table. Rides
-        # the concurrent pool; the index manifest is only published
-        # AFTER the pool succeeds.
-        jobs["seen_index"] = lambda: self.seen_index.add_urls(
-            updates.select("url", "kind"), rnd + 1
-        )
-        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-            futs = {k: pool.submit(fn) for k, fn in jobs.items()}
-            for f in futs.values():
-                f.result()
-        self.seen_index.commit()
-        if self.config.seen_compact_every and (rnd + 1) % self.config.seen_compact_every == 0:
-            # distributed: one executor task per bucket via the storage seam
-            self.seen_index.compact(spark)
-            st.compact_table(spark, "seen", bucket_by="host")
-            st.compact_table(spark, "host_state", bucket_by="host")
-
-        # driver-side stats from the tiny metrics snapshot (no Spark job)
-        mt = st.read_small("metrics", rnd)
-        sums = {
-            c: sum(mt.column(c).to_pylist()) if mt is not None and mt.num_rows else 0
-            for c in (
-                "admitted", "deferred", "fetched_ok", "fetch_errors",
-                "links_extracted", "new_urls",
-            )
-        }
-
-        sched.unpersist()
-
-        return RoundStats(
-            rnd,
-            n_polled,
-            sums["admitted"],
-            sums["deferred"],
-            sums["fetched_ok"],
-            sums["fetch_errors"],
-            sums["links_extracted"],
-            sums["new_urls"],
-            int((time.monotonic() - t0) * 1000),
-        )
+            # released on every exit: a failed round must not leak the
+            # cached admission schedule into the next one
+            sched.unpersist()
 
     # ------------------------------------------------------------------
     def run(self, seeds: list[str] | None = None, max_rounds: int | None = None) -> CrawlReport:

@@ -41,6 +41,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from ..operators.seen_index import _atomic_write
 
@@ -48,6 +49,20 @@ from ..operators.seen_index import _atomic_write
 # the snapshot-expiry maintenance MUST refuse them (plans/view.py
 # imports this set for its union-vs-snapshot read dispatch)
 UNION_LOG_TABLES = {"results", "edges", "metrics", "order"}
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """The type a parquet read yields: file sources read every field,
+    array element and map value as nullable (Scala ``asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 class CheckpointStore:
@@ -120,7 +135,17 @@ class CheckpointStore:
                 self.num_buckets, F.pmod(F.xxhash64(F.col(bucket_by)), F.lit(self.num_buckets))
             )
         df.write.mode("overwrite").parquet(path)
-        entry = {"round": round_no, "path": path, "bucket_by": bucket_by, "meta": meta or {}}
+        # the read schema rides the manifest, so reads pass it instead of
+        # launching a schema-inference job per snapshot. It is recorded
+        # in its read (all-nullable) form so that snapshots written by
+        # plans differing only in nullability compare equal in read_union
+        entry = {
+            "round": round_no,
+            "path": path,
+            "bucket_by": bucket_by,
+            "meta": meta or {},
+            "schema": _as_nullable(df.schema).jsonValue(),
+        }
         if delta:
             entry["kind"] = "delta"
         manifest = self._load_manifest(table)
@@ -182,14 +207,14 @@ class CheckpointStore:
             s for s in in_range if s.get("kind") == "delta" and s["round"] > base_round
         ]
         if not deltas:
-            return spark.read.parquet(base["path"]) if base else None
+            return self._read(spark, [base]) if base else None
         combiner = self._combiners.get(table)
         if combiner is None:
             raise ValueError(
                 f"table {table!r} has merge-on-read deltas but no registered combiner"
             )
-        base_df = spark.read.parquet(base["path"]) if base else None
-        delta_dfs = [(s["round"], spark.read.parquet(s["path"])) for s in deltas]
+        base_df = self._read(spark, [base]) if base else None
+        delta_dfs = [(s["round"], self._read(spark, [s])) for s in deltas]
         return combiner(base_df, delta_dfs)
 
     def read_union(self, spark: SparkSession, table: str) -> DataFrame | None:
@@ -198,7 +223,18 @@ class CheckpointStore:
         snaps = self._load_manifest(table)["snapshots"]
         if not snaps:
             return None
-        return spark.read.parquet(*[s["path"] for s in snaps])
+        return self._read(spark, snaps)
+
+    @staticmethod
+    def _read(spark: SparkSession, entries: list[dict]) -> DataFrame:
+        """Read manifest entries with their recorded schema. Entries
+        written before schemas were recorded, or entries whose schemas
+        differ, fall back to parquet schema inference (one Spark job)."""
+        schema = entries[0].get("schema")
+        reader = spark.read
+        if schema is not None and all(s.get("schema") == schema for s in entries):
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(*[s["path"] for s in entries])
 
     def drop(self, table: str) -> None:
         shutil.rmtree(os.path.join(self.root, table), ignore_errors=True)

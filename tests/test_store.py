@@ -454,3 +454,146 @@ class TestExpireContractRegressions:
             store.expire_snapshots("results", keep_last_n=1)
         # all rounds intact
         assert [s["round"] for s in store._load_manifest("results")["snapshots"]] == [1, 2, 3]
+
+
+def _small_crawl_engine(spark, tmp_path, **cfg_overrides):
+    """A 120-page, 4-bucket engine over generated fixtures, seeded with
+    one URL per host."""
+    import duckdb
+
+    from atra_spark.config import CrawlConfig
+    from atra_spark.plans.crawl import CrawlEngine
+    from atra_spark.sources.fixtures import ensure_fixtures
+    from atra_spark.urlkit import NORMAL, UNBOUNDED_DISTANCE, Budget
+
+    paths = ensure_fixtures(
+        str(tmp_path / "fix"), n_pages=120, n_hosts=6,
+        body_paragraphs=2, links_range=(3, 6),
+    )
+    cfg = CrawlConfig(
+        default_budget=Budget(
+            kind=NORMAL, depth_on_website=0, distance_to_seed=UNBOUNDED_DISTANCE
+        ),
+        delay_ms=1,
+        round_budget_ms=60_000,
+        **cfg_overrides,
+    )
+    store = CheckpointStore(str(tmp_path / "store"), num_buckets=4)
+    eng = CrawlEngine(spark, store, cfg, paths["pages"], paths["robots"], num_buckets=4)
+    seeds = [
+        r[0]
+        for r in duckdb.sql(
+            f"SELECT min(url) FROM read_parquet('{paths['pages']}') "
+            "GROUP BY regexp_extract(url, '://([^/]+)', 1)"
+        ).fetchall()
+    ]
+    eng.seed(seeds)
+    return eng, store
+
+
+class TestRecordedSchemaReads:
+    """Snapshot reads pass the schema recorded in the manifest, so they
+    launch no schema-inference job and read exactly what inference
+    would have produced."""
+
+    TABLES = ("frontier", "seen", "results", "edges", "order", "metrics", "host_state")
+
+    @pytest.fixture(scope="class")
+    def crawled(self, spark, tmp_path_factory):
+        eng, store = _small_crawl_engine(
+            spark, tmp_path_factory.mktemp("schema_reads"),
+            seen_compact_every=0, audit_tables=True,
+        )
+        eng.run_round(0)
+        return store
+
+    def test_recorded_schema_equals_inferred(self, spark, crawled):
+        from pyspark.sql.types import StructType
+
+        store = crawled
+        for table in self.TABLES:
+            snaps = store._load_manifest(table)["snapshots"]
+            assert snaps, table
+            for s in snaps:
+                inferred = spark.read.parquet(s["path"]).schema
+                assert StructType.fromJson(s["schema"]) == inferred, (table, s["round"])
+        # composed merge-on-read reads keep the inferred composition's schema
+        for table in ("seen", "host_state"):
+            snaps = store._load_manifest(table)["snapshots"]
+            assert any(s.get("kind") == "delta" for s in snaps), table
+            bases = [s for s in snaps if s.get("kind") != "delta"]
+            base = spark.read.parquet(bases[-1]["path"]) if bases else None
+            deltas = [
+                (s["round"], spark.read.parquet(s["path"]))
+                for s in snaps if s.get("kind") == "delta"
+            ]
+            inferred = store._combiners[table](base, deltas).schema
+            assert store.read_snapshot(spark, table).schema == inferred, table
+
+    def test_reads_launch_no_spark_job(self, spark, crawled):
+        store = crawled
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        try:
+            sc.setJobGroup("recorded-schema-reads", "store reads")
+            for table in self.TABLES:
+                assert store.read_snapshot(spark, table) is not None
+            for table in ("results", "edges", "order", "metrics"):
+                assert store.read_union(spark, table) is not None
+            assert tracker.getJobIdsForGroup("recorded-schema-reads") == []
+            # the probe is not vacuous: an inferring read does launch a job
+            sc.setJobGroup("inferring-read", "inferring read")
+            spark.read.parquet(store._load_manifest("results")["snapshots"][0]["path"])
+            assert tracker.getJobIdsForGroup("inferring-read") != []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    def test_union_across_nullability_reads_without_inference(self, spark, tmp_path):
+        from pyspark.sql import functions as F
+
+        store = CheckpointStore(str(tmp_path), num_buckets=2)
+        store.write_snapshot("log", spark.range(1).select(F.lit(1).alias("v")), 0)
+        store.write_snapshot("log", spark.createDataFrame([(2,)], "v int"), 1)
+        sc = spark.sparkContext
+        try:
+            sc.setJobGroup("nullability-union", "store reads")
+            df = store.read_union(spark, "log")
+            assert sc.statusTracker().getJobIdsForGroup("nullability-union") == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sorted(r["v"] for r in df.collect()) == [1, 2]
+
+    def test_manifest_without_schema_still_reads(self, spark, tmp_path):
+        store = CheckpointStore(str(tmp_path), num_buckets=2)
+        store.register_combiner("t", lambda base, deltas: base.unionByName(deltas[0][1]))
+        store.write_snapshot("t", spark.createDataFrame([("a", 1)], "k string, v int"), 0)
+        store.write_delta("t", spark.createDataFrame([("b", 2)], "k string, v int"), 1)
+        store.write_snapshot("log", spark.createDataFrame([(1,)], "v int"), 0)
+        store.write_snapshot("log", spark.createDataFrame([(2,)], "v int"), 1)
+        for table in ("t", "log"):  # strip the schemas, as in an older store
+            manifest = store._load_manifest(table)
+            for s in manifest["snapshots"]:
+                del s["schema"]
+            store._commit_manifest(table, manifest)
+        assert sorted(r["k"] for r in store.read_snapshot(spark, "t").collect()) == ["a", "b"]
+        assert [r["k"] for r in store.read_snapshot(spark, "t", 0).collect()] == ["a"]
+        assert sorted(r["v"] for r in store.read_union(spark, "log").collect()) == [1, 2]
+
+
+def test_failed_round_releases_admission_cache(spark, tmp_path):
+    eng, store = _small_crawl_engine(spark, tmp_path, audit_tables=False)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    write_delta = store.write_delta
+
+    def failing_write_delta(table, *args, **kwargs):
+        if table == "host_state":
+            raise RuntimeError("injected pool write failure")
+        return write_delta(table, *args, **kwargs)
+
+    store.write_delta = failing_write_delta
+    with pytest.raises(RuntimeError, match="injected"):
+        eng.run_round(0)
+    assert persistent().size() == before
