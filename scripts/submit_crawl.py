@@ -24,6 +24,15 @@ import json
 import sys
 
 
+def codegen_defaults(submitted) -> dict[str, str]:
+    """The engine's codegen-cache settings (``CODEGEN_CONF``) that the
+    ``spark-submit --conf`` values in ``submitted`` (a ``SparkConf``)
+    leave unset; a submitted value always wins."""
+    from atra_spark.session import CODEGEN_CONF
+
+    return {k: v for k, v in CODEGEN_CONF.items() if not submitted.contains(k)}
+
+
 def main() -> int:
     p = argparse.ArgumentParser(description="atra_spark crawl driver")
     p.add_argument("--pages", required=True, help="pages parquet/table path")
@@ -41,10 +50,14 @@ def main() -> int:
 
     # SparkSession comes from spark-submit's conf in cluster mode; the
     # engine's get_spark only fills in local-mode defaults when no
-    # session exists yet.
+    # session exists yet. The codegen cache settings are not local-mode
+    # defaults: without them every stage recompiles each round. The
+    # context is created first so its conf shows what --conf set.
+    from pyspark import SparkConf, SparkContext
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("atra-spark-crawl").getOrCreate()
+    sc = SparkContext.getOrCreate(SparkConf().setAppName("atra-spark-crawl"))
+    spark = SparkSession.builder.config(map=codegen_defaults(sc.getConf())).getOrCreate()
 
     from atra_spark.config import CrawlConfig
     from atra_spark.plans.crawl import CrawlEngine
