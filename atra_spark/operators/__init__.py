@@ -1,2 +1,3 @@
-"""Frontier / seen-set / politeness / bloom operators — the crawl
-dataflow stages of SURVEY.md §2, expressed as DataFrame ops."""
+"""Frontier / seen-set / politeness operators and the persistent seen
+and near-dup indexes — the crawl dataflow stages of SURVEY.md §2,
+expressed as DataFrame ops."""

@@ -26,13 +26,16 @@ def filter_age(df: DataFrame, max_queue_age: int) -> DataFrame:
     return df.filter(F.col("age") <= F.lit(max_queue_age))
 
 
-def filter_state(
-    frontier: DataFrame, seen: DataFrame, allow_recrawl: bool = False
+def filter_state_indexed(
+    frontier: DataFrame, seen_index, allow_recrawl: bool = False
 ) -> DataFrame:
-    """State-based drop on dequeue (polling.rs:180-204): only URLs whose
-    seen-state is Discovered proceed; everything else is in-flight,
-    done, or failed elsewhere. Inner join on the bucketed seen table
-    (both sides share the host-hash layout -> co-partitioned).
+    """State-based drop on dequeue (polling.rs:180-204), served by the
+    bucketed ``SeenIndex``: only URLs whose latest seen-state is
+    Discovered proceed; everything else is in-flight, done, or failed
+    elsewhere. Each task pays a per-bucket point lookup only for the
+    buckets the frontier touches (the reference's own dequeue state
+    check — a RocksDB point read, never a scan of the seen table). The
+    seen-table join it must equal lives in the tests as the reference.
 
     With ``allow_recrawl`` (recrawl_interval configured),
     ProcessedAndStored URLs pass too — they are recrawl re-enqueues
@@ -41,42 +44,10 @@ def filter_state(
     from ..schemas import KIND_PROCESSED_AND_STORED
 
     if not allow_recrawl:
-        # fast path: left-semi on the Discovered subset (no payload
-        # columns cross the join)
-        discovered = seen.filter(F.col("kind") == KIND_DISCOVERED).select("url")
-        return frontier.join(discovered, on="url", how="left_semi")
-    kinds = seen.select("url", "kind")
-    joined = frontier.join(kinds, on="url", how="left")
-    keep = (F.col("kind") == KIND_DISCOVERED) | (
-        F.col("kind") == KIND_PROCESSED_AND_STORED
-    )
-    return (
-        joined.filter(keep)
-        .withColumn("is_recrawl", F.col("kind") == KIND_PROCESSED_AND_STORED)
-        .drop("kind")
-    )
-
-
-def filter_state_indexed(
-    frontier: DataFrame, seen_index, allow_recrawl: bool = False, aligned: bool = False
-) -> DataFrame:
-    """``filter_state`` served by the bucketed ``SeenIndex`` instead of
-    the composed seen TABLE — the engine's default path. Semantics are
-    identical (equivalence pytest-pinned); economics differ: the table
-    path folds + shuffles O(|seen|) every round, the index path pays a
-    per-bucket point lookup only for the buckets the frontier touches
-    (the reference's own dequeue state check, polling.rs:180-204 — a
-    RocksDB point read, never a table scan)."""
-    from ..schemas import KIND_PROCESSED_AND_STORED
-
-    if not allow_recrawl:
-        return seen_index.filter_by_state(
-            frontier, (KIND_DISCOVERED,), aligned=aligned
-        )
+        return seen_index.filter_by_state(frontier, (KIND_DISCOVERED,))
     out = seen_index.filter_by_state(
         frontier,
         (KIND_DISCOVERED, KIND_PROCESSED_AND_STORED),
-        aligned=aligned,
         with_kind=True,
     )
     return out.withColumn(

@@ -19,9 +19,9 @@ dedup agree on what "near" means).
 
 Design (mirrors SeenIndex, key differences called out):
 
-- State = per-bucket parquet delta chains under a BucketStorage seam
-  (LocalBucketStorage / FlatObjectBucketStorage — the same object-store
-  abstraction as the SeenIndex). A band row is
+- State = per-bucket parquet delta chains behind the SeenIndex's
+  ``LocalBucketStorage`` (tests substitute a counting subclass through
+  ``storage=``). A band row is
   ``(bkey, id, h0..h{H-1})``: ``bkey = xxhash64(band, h_i.., salt)``
   routes the row; the full signature RIDES ALONG so candidate
   verification is a vectorized in-bucket compare — no second index
@@ -41,6 +41,10 @@ Design (mirrors SeenIndex, key differences called out):
   of documents that were never stored.
 - ``compact()`` folds each bucket's chain into one sorted base file
   (per-bucket, incremental — never a global rewrite).
+- Worker caches are keyed by the index's incarnation, an id minted on
+  every ``reset()``/``rebuild()``: a rebuilt index rewrites
+  ``bands_b00000.parquet`` under the same name, and a warm worker must
+  not serve the old contents.
 
 Recall contract: a probe pair is verified with
 ``n_eq >= ceil(threshold * num_hashes)`` equal signature components.
@@ -82,14 +86,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .seen_index import _atomic_write, _cache_put, _default_storage
+from .seen_index import (
+    LocalBucketStorage,
+    _atomic_write,
+    _load_chain,
+    _manifest_incarnation,
+    _new_incarnation,
+)
 
 _FORMAT = "neardup-bands-v1"
 _BUCKET_COL = "__ndx_bucket"
 
-# worker-local probe cache: storage.key(bucket) -> (chain, bkey-sorted
-# column arrays). Chain-PREFIX reuse: when the served chain extends the
-# cached one, only the tail files are read (the per-batch warm path).
+# worker-local probe cache of bkey-sorted bucket chains (_load_chain)
 _BAND_CACHE: OrderedDict = OrderedDict()
 _BAND_CACHE_CAP = 64
 
@@ -110,48 +118,27 @@ def _read_band_table(storage, bucket: int, name: str) -> dict:
 
 
 def _load_bands(
-    storage, bucket: int, chain: tuple[str, ...], num_hashes: int
+    storage, incarnation: str, bucket: int, chain: tuple[str, ...], num_hashes: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """One bucket's band rows folded from its delta chain: returns
     (bkey sorted ascending, ids aligned, sigs aligned [n, H])."""
-    key = storage.key(bucket)
-    cached = _BAND_CACHE.get(key)
-    start = 0
-    prev = None
-    if cached is not None:
-        old_chain, arrs = cached
-        if old_chain == chain[: len(old_chain)]:
-            start = len(old_chain)
-            prev = arrs
-        # else: compaction replaced the chain -> rebuild from scratch
-    if prev is not None and start == len(chain):
-        _BAND_CACHE.move_to_end(key)
-        return prev
-    parts_k, parts_i, parts_s = [], [], []
-    if prev is not None:
-        parts_k.append(prev[0])
-        parts_i.append(prev[1])
-        parts_s.append(prev[2])
-    for name in chain[start:]:
+
+    def read(bucket, name):
         cols = _read_band_table(storage, bucket, name)
-        parts_k.append(cols["bkey"])
-        parts_i.append(cols["id"])
-        parts_s.append(
+        sigs = (
             np.column_stack([cols[c] for c in _sig_cols(num_hashes)])
             if len(cols["bkey"])
             else np.empty((0, num_hashes), dtype=np.int64)
         )
-    bkey = np.concatenate(parts_k) if parts_k else np.empty(0, dtype=np.int64)
-    ids = np.concatenate(parts_i) if parts_i else np.empty(0, dtype=np.int64)
-    sigs = (
-        np.concatenate(parts_s)
-        if parts_s
-        else np.empty((0, num_hashes), dtype=np.int64)
+        return cols["bkey"], cols["id"], sigs
+
+    def fold(bkey, ids, sigs):
+        order = np.argsort(bkey, kind="stable")
+        return bkey[order], ids[order], sigs[order]
+
+    return _load_chain(
+        _BAND_CACHE, _BAND_CACHE_CAP, storage, incarnation, bucket, chain, read, fold
     )
-    order = np.argsort(bkey, kind="stable")
-    arrs = (bkey[order], ids[order], sigs[order])
-    _cache_put(_BAND_CACHE, _BAND_CACHE_CAP, key, (tuple(chain), arrs))
-    return arrs
 
 
 class NearDupIndex:
@@ -182,7 +169,7 @@ class NearDupIndex:
         if num_hashes % rows_per_band != 0:
             raise ValueError("num_hashes must be divisible by rows_per_band")
         self.root = root
-        self.storage = storage if storage is not None else _default_storage(root)
+        self.storage = storage if storage is not None else LocalBucketStorage(root)
         self.num_buckets = num_buckets
         self.num_hashes = num_hashes
         self.rows_per_band = rows_per_band
@@ -190,6 +177,7 @@ class NearDupIndex:
         self.k = k
         os.makedirs(root, exist_ok=True)
         self._manifest = self._load_manifest()
+        self._incarnation = _manifest_incarnation(self._manifest)
         geo = {
             "num_buckets": num_buckets,
             "num_hashes": num_hashes,
@@ -242,6 +230,7 @@ class NearDupIndex:
         shutil.rmtree(self.root, ignore_errors=True)
         os.makedirs(self.root, exist_ok=True)
         self._manifest = None
+        self._incarnation = _new_incarnation()
         self._pending = None
         self._pending_batch = None
 
@@ -317,6 +306,7 @@ class NearDupIndex:
             )
         chains = {int(b): tuple(v["deltas"]) for b, v in buckets_meta.items()}
         storage = self.storage
+        incarnation = self._incarnation
         bands = self._band_rows(df, text_col, id_col)
 
         out_schema = StructType(
@@ -334,7 +324,7 @@ class NearDupIndex:
                 return pd.DataFrame({"id": [], "dup_of": [], "n_eq": []}).astype(
                     {"id": np.int64, "dup_of": np.int64, "n_eq": np.int32}
                 )
-            skey, sids, ssigs = _load_bands(storage, b, chain, H)
+            skey, sids, ssigs = _load_bands(storage, incarnation, b, chain, H)
             ck = pdf["bkey"].to_numpy()
             cid = pdf["id"].to_numpy()
             csig = np.column_stack([pdf[c].to_numpy() for c in _sig_cols(H)])
@@ -501,6 +491,7 @@ class NearDupIndex:
             "num_hashes": self.num_hashes,
             "rows_per_band": self.rows_per_band,
             "k": self.k,
+            "incarnation": self._incarnation,
             "buckets": self._pending,
         }
         _atomic_write(self._manifest_path(), json.dumps(manifest).encode())
@@ -518,11 +509,11 @@ class NearDupIndex:
     # -- maintenance ------------------------------------------------------------
     @staticmethod
     def _compact_bucket(
-        storage, bucket: int, chain: list[str], base_name: str, num_hashes: int
+        storage, incarnation: str, bucket: int, chain: list[str], base_name: str,
+        num_hashes: int,
     ) -> None:
         """Fold ONE bucket's delta chain into a bkey-sorted base file —
-        runs on the driver (local path) or inside an executor task
-        (distributed path), all I/O through the storage seam.
+        runs inside an executor task, all I/O through the storage seam.
 
         Crash safety (ADVICE r5, medium): write-only — superseded chain
         files are garbage-collected by ``compact()`` only AFTER the new
@@ -530,21 +521,21 @@ class NearDupIndex:
         in here leaves the committed manifest's chain fully readable
         and the task idempotent (a retry re-reads the still-present
         chain and rewrites the same base)."""
-        bkey, ids, sigs = _load_bands(storage, bucket, tuple(chain), num_hashes)
+        bkey, ids, sigs = _load_bands(
+            storage, incarnation, bucket, tuple(chain), num_hashes
+        )
         cols = {"bkey": bkey, "id": ids}
         for j, c in enumerate(_sig_cols(num_hashes)):
             cols[c] = sigs[:, j].copy()
         _write_band_table(storage, bucket, base_name, cols)
 
-    def compact(self, spark=None) -> None:
+    def compact(self, spark) -> None:
         """Fold each bucket's delta chain into one bkey-sorted base
         file (per-bucket and incremental, through the storage seam —
-        never a global rewrite). With a SparkSession the fold runs as
-        ONE DISTRIBUTED job, one task per bucket (same shape as
-        ``admit`` — nothing bucket-sized touches the driver); without
-        one it loops buckets driver-side (fine on local/shared fs).
-        Probe caches key on the chain, so a compacted chain misses
-        once and reloads one file."""
+        never a global rewrite) as ONE DISTRIBUTED job, one task per
+        bucket (same shape as ``admit`` — nothing bucket-sized touches
+        the driver). Probe caches key on the chain, so a compacted
+        chain misses once and reloads one file."""
         if not self._manifest:
             return
         H = self.num_hashes
@@ -556,14 +547,16 @@ class NearDupIndex:
             for b, ent in buckets.items()
             if len(ent.get("deltas", [])) > 1
         ]
-        if spark is not None and work:
+        if work:
             storage = self.storage
+            incarnation = self._incarnation
             compact_one = NearDupIndex._compact_bucket
 
             def _task(pdf: pd.DataFrame) -> pd.DataFrame:
                 for row in pdf.itertuples(index=False):
                     compact_one(
-                        storage, int(row.bucket), json.loads(row.chain), base, H
+                        storage, incarnation, int(row.bucket),
+                        json.loads(row.chain), base, H,
                     )
                 return pdf[["bucket"]]
 
@@ -574,9 +567,6 @@ class NearDupIndex:
                 _task,
                 StructType([StructField("bucket", IntegerType())]),
             ).count()
-        else:
-            for b, ch in work:
-                NearDupIndex._compact_bucket(self.storage, b, ch, base, H)
         # two-phase publish (ADVICE r5, medium): bases are written
         # above; commit the manifest pointing at [base] FIRST, and only
         # then GC the now-unreferenced chain files. A crash before the

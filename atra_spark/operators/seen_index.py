@@ -6,7 +6,8 @@ the exact key lookup (``key_may_exist_cf``,
 atra/src/recrawl_management/mod.rs:62; exact get + merge-operator fold
 in link_state/db.rs, the dequeue state check at
 queue/.../polling.rs:180-204). This module is that storage engine
-mapped onto Spark's execution model:
+mapped onto Spark's execution model, and the engine's only URL-seen
+membership implementation:
 
 - the URL universe is split into ``num_buckets`` buckets by
   ``pmod(hash(url), B)`` — Spark's OWN hash-partitioning assignment
@@ -30,10 +31,12 @@ mapped onto Spark's execution model:
   verdict a 2^-128-scale event (expected colliding pairs at 10^10
   URLs: n^2/2^129 ~= 1.5e-19) — exact for any real corpus;
 - membership probing (``prune_new``) and state lookup
-  (``filter_by_state``) run ``mapInPandas``: each task loads ONLY its
-  buckets' bitmaps (and, only for rows the bloom cannot reject, that
-  bucket's delta chain) from shared storage, with a per-worker LRU
-  cache across tasks.
+  (``filter_by_state``) are one ``mapInPandas`` kernel
+  (``_latest_kinds``): each task loads ONLY its buckets' bitmaps (and,
+  only for rows the bloom cannot reject, that bucket's delta chain)
+  from shared storage, with a per-worker LRU cache across tasks keyed
+  by the index's incarnation, so a reset index never serves a warm
+  worker's bitmaps or hash sets from before the reset.
 
 Serving the dequeue state check from this index is what removes the
 last per-round O(|seen|) read from the engine: the seen TABLE is now
@@ -47,7 +50,7 @@ residency is bounded by (buckets per task) x bitmap size + the LRU
 cap, not by the whole index. Sizing at 10^10 URLs / 1% fp: the
 optimal bloom needs m = -n*ln(0.01)/ln(2)^2 ~= 9.6 bits per URL ->
 ~12 GB of bitmaps TOTAL; with B = 4096 buckets that is ~3 MB per
-bucket — one small object-store read per task, never a 12 GB
+bucket — one small read per task, never a 12 GB
 broadcast. Exact-confirm deltas are ~2.4M URLs/bucket (~41 MB of
 hash-pair+kind rows, vs ~200 MB as URL strings), read only by tasks
 whose batch has bloom hits and cached across tasks by delta chain
@@ -82,10 +85,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .bloom import _K_HASHES, _positions  # shared geometry: build == probe
 from ..schemas import KIND_DISCOVERED
 
 _FORMAT = 3  # v3: deltas carry the link-state kind (state lookups served here)
+# manifests written before the incarnation id existed read as this one
+_DEFAULT_INCARNATION = "0"
+_K_HASHES = 7  # bloom hash count, optimal for ~1% fp
+_KEEP_BLOOMS = 2  # newest bitmaps per bucket that compaction keeps
 _BUCKET_COL = "_si_bucket"
 _H1_COL = "_si_h1"
 _H2_COL = "_si_h2"
@@ -95,10 +101,33 @@ _KIND_COL = "_si_kind"
 # per-worker caches (live in the reused Python worker processes; an
 # executor only ever caches the buckets it actually probed)
 # ---------------------------------------------------------------------------
-_BLOOM_CACHE: OrderedDict[str, np.ndarray] = OrderedDict()
-_HASHSET_CACHE: OrderedDict[str, tuple[tuple, np.ndarray, np.ndarray, np.ndarray]] = OrderedDict()
+_BLOOM_CACHE: OrderedDict[tuple[str, str], np.ndarray] = OrderedDict()
+_HASHSET_CACHE: OrderedDict[tuple[str, str], tuple[tuple, tuple]] = OrderedDict()
 _BLOOM_CACHE_CAP = 256
 _HASHSET_CACHE_CAP = 64
+
+
+def _new_incarnation() -> str:
+    """Id of one life of an index directory: minted on every reset, so
+    files rewritten under the same names never hit warm worker caches."""
+    return uuid.uuid4().hex
+
+
+def _manifest_incarnation(manifest: dict | None) -> str:
+    """The committed incarnation, or a fresh one for an empty index."""
+    if manifest is None:
+        return _new_incarnation()
+    return manifest.get("incarnation", _DEFAULT_INCARNATION)
+
+
+def _positions(h: np.ndarray, m: int) -> list[np.ndarray]:
+    """k bit positions from a single 64-bit hash (Kirsch-Mitzenmacher:
+    pos_i = h1 + i*h2 mod m). Bitmaps on disk depend on these exact
+    positions."""
+    hu = h.astype(np.uint64)
+    h1 = hu & np.uint64(0xFFFFFFFF)
+    h2 = (hu >> np.uint64(32)) | np.uint64(1)
+    return [((h1 + np.uint64(i) * h2) % np.uint64(m)).astype(np.int64) for i in range(_K_HASHES)]
 
 
 def _cache_put(cache: OrderedDict, cap: int, key, value) -> None:
@@ -108,8 +137,8 @@ def _cache_put(cache: OrderedDict, cap: int, key, value) -> None:
         cache.popitem(last=False)
 
 
-def _load_bloom(storage, bucket: int, name: str) -> np.ndarray:
-    key = storage.key(bucket, name)
+def _load_bloom(storage, incarnation: str, bucket: int, name: str) -> np.ndarray:
+    key = (incarnation, storage.key(bucket, name))
     bits = _BLOOM_CACHE.get(key)
     if bits is None:
         bits = np.frombuffer(storage.read_bytes(bucket, name), dtype=np.uint8)
@@ -117,6 +146,30 @@ def _load_bloom(storage, bucket: int, name: str) -> np.ndarray:
     else:
         _BLOOM_CACHE.move_to_end(key)
     return bits
+
+
+def _load_chain(cache, cap, storage, incarnation, bucket, chain, read, fold):
+    """One bucket's delta chain folded into one value, LRU-cached per
+    worker under (incarnation, bucket). When the cached chain is a
+    PREFIX of ``chain`` only the new tail files are read and folded
+    onto the cached value (the per-round warm path reads exactly one
+    small file); any other chain (compaction replaced it) refolds from
+    scratch. ``read`` returns one file's column arrays; ``fold`` gets
+    each column concatenated in chain order, the cached (already
+    folded) rows first."""
+    key = (incarnation, storage.key(bucket))
+    cached = cache.get(key)
+    if cached is not None and cached[0] == chain:
+        cache.move_to_end(key)
+        return cached[1]
+    if cached is not None and cached[0] == chain[: len(cached[0])]:
+        start, parts = len(cached[0]), [cached[1]]
+    else:
+        start, parts = 0, []
+    parts += [read(bucket, name) for name in chain[start:]]
+    value = fold(*(np.concatenate(cols) for cols in zip(*parts)))
+    _cache_put(cache, cap, key, (tuple(chain), value))
+    return value
 
 
 def _dedup_last(
@@ -137,47 +190,15 @@ def _dedup_last(
 
 
 def _load_hashset(
-    storage, bucket: int, deltas: tuple[str, ...]
+    storage, incarnation: str, bucket: int, deltas: tuple[str, ...]
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Exact (hash-pair -> latest kind) set for one bucket = fold of its
     delta parquets in chain order, lexsorted by (h1, h2) with one row
-    per pair. Cached per worker keyed by bucket; when the cached delta
-    chain is a PREFIX of the requested one only the new tail files are
-    read (the per-round warm path reads exactly one small file; the
-    re-dedup is an in-memory numpy sort of the bucket)."""
-    key = storage.key(bucket)
-    cached = _HASHSET_CACHE.get(key)
-    start = 0
-    if cached is not None:
-        old_chain, s1, s2, sk = cached
-        if old_chain == deltas[: len(old_chain)]:
-            start = len(old_chain)
-        else:  # compaction replaced the chain -> rebuild from scratch
-            s1 = s2 = sk = None
-            start = 0
-    else:
-        s1 = s2 = sk = None
-    if start < len(deltas) or s1 is None:
-        # cached (already-deduped) rows first, then tail files in chain
-        # order: the stable keep-last dedup makes newer kinds win
-        parts1 = [] if s1 is None else [s1]
-        parts2 = [] if s2 is None else [s2]
-        partsk = [] if sk is None else [sk]
-        for name in deltas[start:]:
-            h1a, h2a, ka = storage.read_pairs(bucket, name)
-            parts1.append(h1a)
-            parts2.append(h2a)
-            partsk.append(ka)
-        h1 = np.concatenate(parts1) if parts1 else np.empty(0, dtype=np.int64)
-        h2 = np.concatenate(parts2) if parts2 else np.empty(0, dtype=np.int64)
-        ks = np.concatenate(partsk) if partsk else np.empty(0, dtype=np.int32)
-        s1, s2, sk = _dedup_last(h1, h2, ks)
-        _cache_put(
-            _HASHSET_CACHE, _HASHSET_CACHE_CAP, key, (tuple(deltas), s1, s2, sk)
-        )
-    else:
-        _HASHSET_CACHE.move_to_end(key)
-    return s1, s2, sk
+    per pair."""
+    return _load_chain(
+        _HASHSET_CACHE, _HASHSET_CACHE_CAP, storage, incarnation, bucket,
+        deltas, storage.read_pairs, _dedup_last,
+    )
 
 
 def _pair_lookup(
@@ -207,22 +228,38 @@ def _pair_lookup(
     return out
 
 
-def _pair_isin(
-    c1: np.ndarray, c2: np.ndarray, s1: np.ndarray, s2: np.ndarray
+def _latest_kinds(
+    storage,
+    incarnation: str,
+    buckets: dict[int, tuple[str, tuple[str, ...]]],
+    b_arr: np.ndarray,
+    h1_arr: np.ndarray,
+    h2_arr: np.ndarray,
 ) -> np.ndarray:
-    """Membership of (c1, c2) pairs in the deduped lexsorted seen pairs
-    (no kind materialization — the prune_new hot path)."""
-    if len(s1) == 0:
-        return np.zeros(len(c1), dtype=bool)
-    left = np.searchsorted(s1, c1, "left")
-    right = np.searchsorted(s1, c1, "right")
-    found = np.zeros(len(c1), dtype=bool)
-    one = (right - left) == 1
-    if one.any():
-        found[one] = s2[left[one]] == c2[one]
-    for i in np.nonzero((right - left) > 1)[0]:
-        found[i] = c2[i] in s2[left[i] : right[i]]
-    return found
+    """The probe kernel behind ``prune_new`` and ``filter_by_state``:
+    each row's latest indexed kind, or -1 when its URL is absent.
+    Per bucket: bloom test first (a miss is definitely absent), then
+    only the rows the bloom cannot reject are confirmed against the
+    bucket's exact hash-pair set."""
+    kinds = np.full(len(b_arr), -1, dtype=np.int32)
+    for b in np.unique(b_arr):
+        meta = buckets.get(int(b))
+        if meta is None:  # bucket never indexed
+            continue
+        bloom_name, deltas = meta
+        if not deltas:
+            continue
+        rows = np.nonzero(b_arr == b)[0]
+        bits = _load_bloom(storage, incarnation, int(b), bloom_name)
+        m = len(bits) * 8
+        maybe = np.ones(len(rows), dtype=bool)
+        for pos in _positions(h1_arr[rows], m):
+            maybe &= (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
+        rows = rows[maybe]
+        if len(rows):
+            s1, s2, sk = _load_hashset(storage, incarnation, int(b), deltas)
+            kinds[rows] = _pair_lookup(h1_arr[rows], h2_arr[rows], s1, s2, sk)
+    return kinds
 
 
 def _atomic_write(path: str, data: bytes) -> None:
@@ -233,18 +270,16 @@ def _atomic_write(path: str, data: bytes) -> None:
 
 
 class LocalBucketStorage:
-    """Bucket-object I/O seam for the SeenIndex (VERDICT r3 #5).
+    """Bucket-object I/O for the SeenIndex and the NearDupIndex.
 
-    Every byte the index reads or writes — bloom bitmaps and hash-pair
-    delta parquets, one directory per bucket — goes through this
+    Every byte an index reads or writes — bloom bitmaps, hash-pair and
+    band parquets, one directory per bucket — goes through this
     object, on the driver AND inside executor tasks (it is a plain
-    picklable value: just the root path). The local-filesystem
-    implementation below is what local[n] and shared-fs clusters use;
-    an object-store implementation (S3/GCS/ABFS paths, conditional-put
-    for the atomic publishes) implements the same five methods and
-    slots in via ``SeenIndex(..., storage=...)`` without touching any
-    index logic. Cache keys are storage-scoped so two indexes never
-    alias each other's worker-side LRU entries."""
+    picklable value: just the root path). It is the only backend: it
+    serves local[n] and shared-filesystem clusters. Tests pass a
+    counting subclass through ``storage=`` to see every read. Cache
+    keys are storage-scoped so two indexes never alias each other's
+    worker-side LRU entries."""
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -313,118 +348,6 @@ class LocalBucketStorage:
             pass
 
 
-class FlatObjectBucketStorage:
-    """Object-store-shaped BucketStorage: the SECOND implementation of
-    the seam, proving the interface complete for S3/GCS/ABFS backends
-    (VERDICT r4 #9). The namespace is FLAT — string keys
-    ``"<bucket>/<name>"`` mapped to whole objects; no directories, no
-    rename, no listdir ever reaches the API surface:
-
-    - GET/PUT move whole objects (pair tables travel as parquet BYTES
-      through in-memory Arrow buffers, never a local file path),
-    - LIST is a key-prefix scan (S3 ListObjectsV2 semantics),
-    - publishes are single-object puts (the conditional-put analog —
-      the temp-file shuffle below is an emulation detail of the local
-      backing dir, not part of the contract).
-
-    Picklable (root string only), so executors construct their side of
-    it exactly like LocalBucketStorage. A real S3 implementation swaps
-    the six method bodies for boto3 calls and changes nothing else."""
-
-    def __init__(self, root: str) -> None:
-        self.root = root
-
-    def _obj_key(self, bucket: int, name: str) -> str:
-        return f"{bucket:05d}/{name}"
-
-    def _fname(self, key: str) -> str:
-        from urllib.parse import quote
-
-        return os.path.join(self.root, quote(key, safe=""))
-
-    def key(self, bucket: int, name: str = "") -> str:
-        # storage-scoped cache key (distinct scheme so a Local index on
-        # the same root can never alias this one's worker LRU entries)
-        return f"flatobj://{self.root}/{self._obj_key(bucket, name)}"
-
-    def _put(self, key: str, data: bytes) -> None:
-        os.makedirs(self.root, exist_ok=True)
-        _atomic_write(self._fname(key), data)
-
-    def _get(self, key: str) -> bytes:
-        with open(self._fname(key), "rb") as f:
-            return f.read()
-
-    def read_bytes(self, bucket: int, name: str) -> bytes:
-        return self._get(self._obj_key(bucket, name))
-
-    def write_bytes(self, bucket: int, name: str, data: bytes) -> None:
-        self._put(self._obj_key(bucket, name), data)
-
-    def read_pairs(
-        self, bucket: int, name: str
-    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(
-            pa.BufferReader(self.read_bytes(bucket, name)),
-            columns=["h1", "h2", "kind"],
-        )
-        return (
-            t.column("h1").to_numpy(),
-            t.column("h2").to_numpy(),
-            t.column("kind").to_numpy(),
-        )
-
-    def write_pairs(
-        self, bucket: int, name: str, h1: np.ndarray, h2: np.ndarray, kind: np.ndarray
-    ) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        sink = pa.BufferOutputStream()
-        pq.write_table(
-            pa.table(
-                {
-                    "h1": pa.array(h1, type=pa.int64()),
-                    "h2": pa.array(h2, type=pa.int64()),
-                    "kind": pa.array(kind.astype(np.int32), type=pa.int32()),
-                }
-            ),
-            sink,
-            compression="zstd",
-        )
-        self.write_bytes(bucket, name, sink.getvalue().to_pybytes())
-
-    def list_bucket(self, bucket: int) -> list[str]:
-        from urllib.parse import quote, unquote
-
-        prefix = quote(self._obj_key(bucket, ""), safe="")
-        try:
-            entries = os.listdir(self.root)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            unquote(e)[len(self._obj_key(bucket, "")):]
-            for e in entries
-            if e.startswith(prefix)
-        )
-
-    def remove(self, bucket: int, name: str) -> None:
-        try:
-            os.remove(self._fname(self._obj_key(bucket, name)))
-        except FileNotFoundError:
-            pass
-
-
-def _default_storage(root: str):
-    """Storage used when SeenIndex gets none explicitly — a seam the
-    test matrix repoints at FlatObjectBucketStorage to run every index
-    test under both implementations."""
-    return LocalBucketStorage(root)
-
-
 def _hash_cols(col):
     """The index's key triple, all JVM-side: bucket routing uses
     Spark's own hash-partitioning function (murmur3 via F.hash, the
@@ -454,14 +377,15 @@ class SeenIndex:
         root: str,
         num_buckets: int = 32,
         bloom_bits: int = 1 << 20,
-        storage: "LocalBucketStorage | FlatObjectBucketStorage | None" = None,
+        storage: LocalBucketStorage | None = None,
     ) -> None:
         self.root = root
-        self.storage = storage if storage is not None else _default_storage(root)
+        self.storage = storage if storage is not None else LocalBucketStorage(root)
         self.num_buckets = num_buckets
         self.bloom_bits = bloom_bits
         os.makedirs(root, exist_ok=True)
         self._manifest = self._load_manifest()
+        self._incarnation = _manifest_incarnation(self._manifest)
         # ordering matters: the format check runs FIRST so a stale
         # on-disk format auto-migrates even when its geometry also
         # differs (an old manifest must never reach the geometry
@@ -509,6 +433,7 @@ class SeenIndex:
         shutil.rmtree(self.root, ignore_errors=True)
         os.makedirs(self.root, exist_ok=True)
         self._manifest = None
+        self._incarnation = _new_incarnation()
         self._pending = None
         self._pending_round = None
 
@@ -598,6 +523,7 @@ class SeenIndex:
             "format": _FORMAT,
             "bloom_bits": self.bloom_bits,
             "num_buckets": self.num_buckets,
+            "incarnation": self._incarnation,
             "buckets": self._pending,
         }
         _atomic_write(self._manifest_path(), json.dumps(manifest).encode())
@@ -615,13 +541,11 @@ class SeenIndex:
 
     @staticmethod
     def _compact_bucket(
-        storage, bucket: int, deltas: list[str], base_name: str,
-        keep_bloom_names: set[str], keep_blooms: int,
+        storage, bucket: int, deltas: list[str], base_name: str, live_bloom: str
     ) -> None:
         """Fold ONE bucket's delta chain into a deduped base file and
-        GC its superseded bloom bitmaps — runs on the driver (local
-        path) or inside an executor task (distributed path), all I/O
-        through the storage seam.
+        GC its superseded bloom bitmaps — runs inside an executor task,
+        all I/O through the storage seam.
 
         Crash safety (ADVICE r5, medium): this phase only WRITES the
         new base — superseded delta files are garbage-collected by
@@ -630,37 +554,29 @@ class SeenIndex:
         manifest's whole chain readable (and the task idempotent: a
         retry re-reads the still-present chain and rewrites the same
         base). Bloom GC stays here because the manifest references
-        exactly one bitmap per bucket (``keep_bloom_names``), which is
+        exactly one bitmap per bucket (``live_bloom``), which is
         always kept."""
         if len(deltas) > 1:
-            parts1, parts2, partsk = [], [], []
-            for d in deltas:
-                h1a, h2a, ka = storage.read_pairs(bucket, d)
-                parts1.append(h1a)
-                parts2.append(h2a)
-                partsk.append(ka)
-            s1, s2, sk = _dedup_last(
-                np.concatenate(parts1), np.concatenate(parts2), np.concatenate(partsk)
-            )
-            storage.write_pairs(bucket, base_name, s1, s2, sk)
+            parts = [storage.read_pairs(bucket, d) for d in deltas]
+            folded = _dedup_last(*(np.concatenate(cols) for cols in zip(*parts)))
+            storage.write_pairs(bucket, base_name, *folded)
         # GC superseded bloom bitmaps (keep the newest few)
         blooms = sorted(
             f for f in storage.list_bucket(bucket)
             if f.startswith("bloom_r") and f.endswith(".bin")
         )
-        for f_old in blooms[:-keep_blooms]:
-            if f_old not in keep_bloom_names:
+        for f_old in blooms[:-_KEEP_BLOOMS]:
+            if f_old != live_bloom:
                 storage.remove(bucket, f_old)
 
-    def compact(self, spark=None, keep_blooms: int = 2) -> None:
+    def compact(self, spark) -> None:
         """Fold each bucket's delta chain into one deduped file (latest
         kind per pair — the chain fold burned in) and GC stale bloom
-        bitmaps. With a SparkSession the fold runs as ONE DISTRIBUTED
-        job, one task per bucket (the same per-bucket task shape as
-        ``add_urls`` — the cluster path: nothing bucket-sized touches
-        the driver); without one it loops buckets driver-side (fine on
-        local/shared fs). Probe caches key on the chain, so a
-        compacted chain simply misses once and reloads one file."""
+        bitmaps, as ONE DISTRIBUTED job with one task per bucket (the
+        same per-bucket task shape as ``add_urls``: nothing
+        bucket-sized touches the driver). Probe caches key on the
+        chain, so a compacted chain simply misses once and reloads one
+        file."""
         if not self._manifest:
             return
         storage = self.storage
@@ -671,15 +587,14 @@ class SeenIndex:
                 (int(b), list(ent.get("deltas", [])),
                  f"hashes_base_r{rnd:05d}.parquet", ent["bloom"])
             )
-        if spark is not None and work:
-            kb = keep_blooms
+        if work:
             compact_one = SeenIndex._compact_bucket
 
             def _task(pdf: pd.DataFrame) -> pd.DataFrame:
                 for row in pdf.itertuples(index=False):
                     compact_one(
                         storage, int(row.bucket), json.loads(row.deltas),
-                        row.base_name, {row.bloom}, kb,
+                        row.base_name, row.bloom,
                     )
                 return pdf[["bucket"]]
 
@@ -689,9 +604,6 @@ class SeenIndex:
             ).repartition(len(work), F.col("bucket")).groupBy("bucket").applyInPandas(
                 _task, StructType([StructField("bucket", IntegerType())])
             ).count()
-        else:
-            for b, ds, bn, bl in work:
-                SeenIndex._compact_bucket(storage, b, ds, bn, {bl}, keep_blooms)
         # two-phase publish (ADVICE r5, medium): 1) bases written above,
         # 2) commit the manifest pointing at [base] — only NOW are the
         # old chains unreferenced — 3) GC superseded delta files. A
@@ -721,17 +633,38 @@ class SeenIndex:
             for b, v in ((self._manifest or {}).get("buckets", {})).items()
         }
 
-    def _tagged(self, df: DataFrame, key: str, aligned: bool) -> DataFrame:
+    def _with_kinds(self, df: DataFrame, aligned: bool, out_schema: StructType, select):
+        """``df`` through the probe kernel: ``select(pdf, kinds)`` gets
+        each Arrow batch with its rows' latest kinds (-1 = absent) and
+        returns the output rows, or None to emit nothing."""
+        storage = self.storage
+        incarnation = self._incarnation
+        buckets = self._buckets_meta()
         tagged = df.select(
             "*",
-            *_hash_cols(F.col(key)),
-            F.pmod(F.hash(key), F.lit(self.num_buckets)).cast("int").alias(_BUCKET_COL),
+            *_hash_cols(F.col("url")),
+            F.pmod(F.hash("url"), F.lit(self.num_buckets)).cast("int").alias(_BUCKET_COL),
         )
         if not aligned:
             tagged = tagged.repartition(self.num_buckets, F.col(_BUCKET_COL))
-        return tagged
 
-    def prune_new(self, candidates: DataFrame, key: str = "url", aligned: bool = False) -> DataFrame:
+        def _probe(batches):
+            for pdf in batches:
+                kinds = _latest_kinds(
+                    storage,
+                    incarnation,
+                    buckets,
+                    pdf[_BUCKET_COL].to_numpy(),
+                    pdf[_H1_COL].to_numpy(),
+                    pdf[_H2_COL].to_numpy(),
+                )
+                out = select(pdf, kinds)
+                if out is not None:
+                    yield out
+
+        return tagged.mapInPandas(_probe, out_schema)
+
+    def prune_new(self, candidates: DataFrame, aligned: bool = False) -> DataFrame:
         """candidates minus the indexed seen set — the engine's core
         anti-join, without ever shuffling the seen table.
 
@@ -745,59 +678,25 @@ class SeenIndex:
         across tasks per worker.
 
         ``aligned=True`` skips the bucket repartition: the caller
-        promises ``candidates`` is already hash-partitioned by ``key``
+        promises ``candidates`` is already hash-partitioned by ``url``
         with ``num_buckets`` partitions (the natural output of
-        ``groupBy(key)`` when spark.sql.shuffle.partitions ==
+        ``groupBy(url)`` when spark.sql.shuffle.partitions ==
         num_buckets — the engine's candidate aggregation), so the
         probe adds ZERO exchange. Misaligned input would still be
         CORRECT (each task loads whatever buckets it sees), only
         slower, but the engine pins alignment with a plan test."""
-        buckets_meta = self._buckets_meta()
-        storage = self.storage
-        out_schema = candidates.schema
         out_cols = candidates.columns
-        tagged = self._tagged(candidates, key, aligned)
 
-        def _probe(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keep = np.zeros(len(pdf), dtype=bool)
-                b_arr = pdf[_BUCKET_COL].to_numpy()
-                h1_arr = pdf[_H1_COL].to_numpy()
-                h2_arr = pdf[_H2_COL].to_numpy()
-                for b in np.unique(b_arr):
-                    sel = b_arr == b
-                    meta = buckets_meta.get(int(b))
-                    if meta is None:  # bucket never indexed -> all new
-                        keep[sel] = True
-                        continue
-                    bloom_name, deltas = meta
-                    bits = _load_bloom(storage, int(b), bloom_name)
-                    m = len(bits) * 8
-                    h = h1_arr[sel]
-                    maybe = np.ones(h.shape, dtype=bool)
-                    for pos in _positions(h, m):
-                        maybe &= (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-                    k = ~maybe  # bloom miss -> definitely new
-                    if maybe.any() and deltas:
-                        s1, s2, _sk = _load_hashset(storage, int(b), deltas)
-                        in_seen = _pair_isin(h1_arr[sel], h2_arr[sel], s1, s2)
-                        k |= maybe & ~in_seen  # fp rescue: not actually seen
-                    elif maybe.any():
-                        k |= maybe  # bloom says maybe but no exact data -> new
-                    keep[sel] = k
-                if keep.any():
-                    yield pdf.loc[keep, out_cols]
+        def _new_rows(pdf, kinds):
+            keep = kinds < 0
+            return pdf.loc[keep, out_cols] if keep.any() else None
 
-        return tagged.mapInPandas(_probe, out_schema)
+        return self._with_kinds(candidates, aligned, candidates.schema, _new_rows)
 
     def filter_by_state(
         self,
         df: DataFrame,
         keep_kinds: tuple[int, ...] | None,
-        key: str = "url",
-        aligned: bool = False,
         with_kind: bool = False,
     ) -> DataFrame:
         """Rows of ``df`` whose indexed link-state kind is in
@@ -811,58 +710,27 @@ class SeenIndex:
         unindexed URLs). ``with_kind=True`` appends the latest ``kind``
         as an int column.
 
-        Same economics as ``prune_new``: no seen-table scan, no
-        broadcast; each task reads only the bitmaps + chains of the
+        Same kernel and economics as ``prune_new``: no seen-table scan,
+        no broadcast; each task reads only the bitmaps + chains of the
         buckets its rows hash to, LRU-cached across tasks — per-round
         read cost tracks the probe side (the frontier), never |seen|.
         """
-        buckets_meta = self._buckets_meta()
-        storage = self.storage
         out_cols = df.columns
         fields = list(df.schema.fields)
         if with_kind:
             fields = fields + [StructField("kind", IntegerType(), True)]
-        out_schema = StructType(fields)
         keep_arr = None if keep_kinds is None else np.asarray(sorted(keep_kinds), dtype=np.int32)
-        tagged = self._tagged(df, key, aligned)
 
-        def _lookup(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                kinds = np.full(len(pdf), -1, dtype=np.int32)
-                b_arr = pdf[_BUCKET_COL].to_numpy()
-                h1_arr = pdf[_H1_COL].to_numpy()
-                h2_arr = pdf[_H2_COL].to_numpy()
-                for b in np.unique(b_arr):
-                    sel = b_arr == b
-                    meta = buckets_meta.get(int(b))
-                    if meta is None:  # bucket never indexed -> no state
-                        continue
-                    bloom_name, deltas = meta
-                    bits = _load_bloom(storage, int(b), bloom_name)
-                    m = len(bits) * 8
-                    h = h1_arr[sel]
-                    maybe = np.ones(h.shape, dtype=bool)
-                    for pos in _positions(h, m):
-                        maybe &= (bits[pos >> 3] & (1 << (pos & 7)).astype(np.uint8)) != 0
-                    if maybe.any() and deltas:
-                        s1, s2, sk = _load_hashset(storage, int(b), deltas)
-                        got = _pair_lookup(h1_arr[sel], h2_arr[sel], s1, s2, sk)
-                        idx = np.nonzero(sel)[0]
-                        kinds[idx] = np.where(maybe, got, -1)
-                if keep_arr is None:
-                    keep = np.ones(len(pdf), dtype=bool)
-                else:
-                    keep = np.isin(kinds, keep_arr)
-                if not keep.any():
-                    continue
-                sub = pdf.loc[keep, out_cols]
-                if with_kind:
-                    ks = kinds[keep]
-                    karr = pd.array(ks, dtype="Int32")
-                    karr[ks < 0] = pd.NA
-                    sub = sub.assign(kind=karr)
-                yield sub
+        def _kept_rows(pdf, kinds):
+            keep = np.ones(len(pdf), dtype=bool) if keep_arr is None else np.isin(kinds, keep_arr)
+            if not keep.any():
+                return None
+            sub = pdf.loc[keep, out_cols]
+            if with_kind:
+                ks = kinds[keep]
+                karr = pd.array(ks, dtype="Int32")
+                karr[ks < 0] = pd.NA
+                sub = sub.assign(kind=karr)
+            return sub
 
-        return tagged.mapInPandas(_lookup, out_schema)
+        return self._with_kinds(df, False, StructType(fields), _kept_rows)

@@ -7,15 +7,11 @@ path must read only the newest delta (the O(batch) economics)."""
 
 import math
 
-import pytest
 from pyspark.sql import functions as F
 
 from atra_spark.functions.dedup import minhash_signatures
 from atra_spark.operators.neardup_index import NearDupIndex
-from atra_spark.operators.seen_index import (
-    FlatObjectBucketStorage,
-    LocalBucketStorage,
-)
+from atra_spark.operators.seen_index import LocalBucketStorage
 
 
 def _docs(spark, rows):
@@ -80,12 +76,10 @@ def _probe_set(out):
 
 
 class TestNearDupIndex:
-    @pytest.mark.parametrize("storage_cls", [LocalBucketStorage, FlatObjectBucketStorage])
-    def test_probe_equals_exhaustive(self, spark, tmp_path, storage_cls):
+    def test_probe_equals_exhaustive(self, spark, tmp_path):
         hist = _docs(spark, _corpus(0, 60))
         batch = _docs(spark, _corpus(100, 140))
-        root = str(tmp_path / "ndx")
-        idx = NearDupIndex(root, num_buckets=8, storage=storage_cls(root))
+        idx = NearDupIndex(str(tmp_path / "ndx"), num_buckets=8)
         idx.admit(hist, 0)
         idx.commit()
         got = _probe_set(idx.probe(batch))
@@ -126,8 +120,7 @@ class TestNearDupIndex:
             idx.probe(batch.repartition(7))
         )
 
-    @pytest.mark.parametrize("distributed", [False, True])
-    def test_compaction_preserves_results(self, spark, tmp_path, distributed):
+    def test_compaction_preserves_results(self, spark, tmp_path):
         idx = NearDupIndex(str(tmp_path / "ndx"), num_buckets=4)
         idx.admit(_docs(spark, _corpus(0, 40)), 0)
         idx.commit()
@@ -135,7 +128,7 @@ class TestNearDupIndex:
         idx.commit()
         batch = _docs(spark, _corpus(500, 540))
         before = _probe_set(idx.probe(batch))
-        idx.compact(spark if distributed else None)
+        idx.compact(spark)
         assert all(
             len(e["deltas"]) == 1 for e in idx._manifest["buckets"].values()
         )
@@ -327,12 +320,38 @@ class TestNearDupIndexEconomics:
         chains0 = {int(b): tuple(v["deltas"])
                    for b, v in idx._manifest["buckets"].items()}
         for b, ch in chains0.items():
-            _load_bands(idx.storage, b, ch, idx.num_hashes)  # cold: full chain
+            _load_bands(idx.storage, idx._incarnation, b, ch, idx.num_hashes)  # cold: full chain
         idx.admit(_docs(spark, _corpus(200, 240)), 1)
         idx.commit()
         reads.clear()
         chains1 = {int(b): tuple(v["deltas"])
                    for b, v in idx._manifest["buckets"].items()}
         for b, ch in chains1.items():
-            _load_bands(idx.storage, b, ch, idx.num_hashes)  # warm: tail only
+            _load_bands(idx.storage, idx._incarnation, b, ch, idx.num_hashes)  # warm: tail only
         assert reads and all("_b00001" in n for n in reads), reads
+
+    def test_rebuilt_index_misses_warm_worker_caches(self, spark, tmp_path):
+        """``rebuild()`` re-admits batch 0, so ``bands_b00000.parquet``
+        is rewritten under the same name with new contents. A warm
+        worker must not serve the old band rows. Loaded here, in the
+        process that holds the module cache, so the cache is certainly
+        warm."""
+        from atra_spark.operators.neardup_index import _load_bands
+
+        idx = NearDupIndex(str(tmp_path / "ndx"), num_buckets=2)
+
+        def indexed_ids():
+            return {
+                int(i)
+                for b, v in idx._manifest["buckets"].items()
+                for i in _load_bands(
+                    idx.storage, idx._incarnation, int(b), tuple(v["deltas"]),
+                    idx.num_hashes,
+                )[1]
+            }
+
+        idx.admit(_docs(spark, _corpus(0, 40)), 0)
+        idx.commit()
+        assert indexed_ids() == set(range(0, 40))
+        idx.rebuild(_docs(spark, _corpus(100, 140)))
+        assert indexed_ids() == set(range(100, 140))

@@ -100,21 +100,6 @@ class TestCandidateAggPlan:
         assert plan.count("HashAggregate") >= 4
 
 
-class TestBloomPrunePlan:
-    def test_anti_join_only_on_maybe_side(self, spark):
-        from atra_spark.operators import bloom as bloom_ops
-
-        seen = spark.range(100).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
-        cands = spark.range(50, 150).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
-        blooms = bloom_ops.build_bloom(seen, num_buckets=4)
-        pruned = bloom_ops.prune_new_candidates(spark, cands, seen, blooms, num_buckets=4)
-        plan = _plan(pruned, "simple")
-        assert "LeftAnti" in plan
-        # the bloom probe gates the anti-join input (ArrowEval on the
-        # candidate side before the join)
-        assert "EvalPython" in plan or "ArrowEval" in plan
-
-
 class TestAlignedFrontierPath:
     """Round-3 frontier bandwidth diet: expand -> dedup-agg -> seen
     probe must cost ONE exchange total, because the candidate agg's
