@@ -6,8 +6,8 @@ domain (urlkit.origin's exact semantics, pytest-verified equivalence)
 with k broadcast hash joins against the vendored PSL snapshot — the
 scale-correct JVM shape (a 9.4k-rule table broadcast once per stage;
 wildcard/exception rules are small enough to inline as literals).
-The pandas UDFs in functions/url_udfs.py remain the reference
-implementations for seeding and ad-hoc input.
+The scalar ``urlkit`` kernel remains the reference implementation,
+and cleans seed lists on the driver.
 """
 
 from __future__ import annotations

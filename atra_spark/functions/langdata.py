@@ -560,26 +560,6 @@ def _trigram_rank_codes(text: str, top: int = _PROFILE_TOP):
     return uniq[order]
 
 
-def _raw_detect_scalar(
-    text: str, langs: tuple[str, ...] = None
-) -> tuple[str | None, float]:
-    """Reference Cavnar-Trenkle pass (pure-Python): kept as the
-    equivalence oracle for the vectorized `_raw_detect` below, which
-    must produce identical (language, confidence) on every input."""
-    doc = _trigram_ranks(text[:1024])
-    if not doc:
-        return None, 0.0
-    max_rank = _PROFILE_TOP
-    worst = len(doc) * max_rank
-    best_lang, best_dist = None, None
-    for lang in langs or _PROFILED_LANGS:
-        prof = _PROFILES[lang]
-        d = sum(abs(prof.get(g, max_rank) - r) for g, r in doc.items())
-        if best_dist is None or d < best_dist or (d == best_dist and lang < best_lang):
-            best_lang, best_dist = lang, d
-    return best_lang, (1.0 - (best_dist / worst) if worst else 0.0)
-
-
 # per-group (sorted gram codes, rank-matrix) cache for the vectorized
 # distance: M[i, j] is group[i]'s rank for the j-th smallest vocab gram
 # code (PROFILE_TOP when absent, exactly prof.get(g, max_rank)) —
@@ -622,10 +602,11 @@ def _raw_detect(text: str, langs: tuple[str, ...] = None) -> tuple[str | None, f
     sum(|prof.get(g, TOP) - r|) is one |M[:, cols] - ranks| row sum.
     This runs per document inside the extraction hot loop, where the
     scalar fold was 40% of total extraction CPU. Exactly equivalent to
-    `_raw_detect_scalar` (gram<->code mapping is bijective; doc grams
-    unseen by every profile contribute TOP - r to all languages alike;
-    distance ties break to the lexicographically smallest language, as
-    the scalar `lang < best_lang` did)."""
+    the scalar reference pass in tests/test_extract.py (gram<->code
+    mapping is bijective; doc grams unseen by every profile contribute
+    TOP - r to all languages alike; distance ties break to the
+    lexicographically smallest language, as the scalar
+    `lang < best_lang` does)."""
     import numpy as np
 
     codes = _trigram_rank_codes(text[:1024])

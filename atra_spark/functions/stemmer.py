@@ -2065,14 +2065,6 @@ def _hu_undouble(w: str) -> str:
     return w[: len(w) - len(d)] + d[1:]
 
 
-def _hu_v_ending(w: str) -> str:
-    if w.endswith("á"):
-        return w[:-1] + "a"
-    if w.endswith("é"):
-        return w[:-1] + "e"
-    return w
-
-
 def _hu_longest(w: str, sufs) -> str | None:
     """Longest pattern matching the end of w — snowball among semantics:
     the match is chosen by length alone, and a failing condition on the

@@ -17,7 +17,11 @@ Leskovec-Rajaraman-Ullman ch. 3 (the identical sketch family as
 functions/dedup.minhash_lsh_candidates, so in-batch and cross-batch
 dedup agree on what "near" means).
 
-Design (mirrors SeenIndex, key differences called out):
+Design: the delta-chain lifecycle (manifest, format/geometry check,
+staged chains, atomic commit, two-phase per-bucket compaction, worker
+caches keyed by incarnation) is the SeenIndex's, shared through
+``DeltaChainIndex`` in operators/seen_index.py; this module supplies
+the band rows, the probe and the per-bucket fold.
 
 - State = per-bucket parquet delta chains behind the SeenIndex's
   ``LocalBucketStorage`` (tests substitute a counting subclass through
@@ -34,17 +38,12 @@ Design (mirrors SeenIndex, key differences called out):
   file), binary-searches the sorted bkey column, and counts equal
   signature components per candidate. Nothing corpus-sized is ever
   shuffled or re-read.
-- Admission is staged-then-committed exactly like SeenIndex rounds:
-  ``admit()`` writes immutable per-bucket deltas and stages a manifest;
-  ``commit()`` publishes it atomically AFTER the caller's own corpus
-  commit, so a crashed batch can never flag future documents as dups
-  of documents that were never stored.
-- ``compact()`` folds each bucket's chain into one sorted base file
-  (per-bucket, incremental — never a global rewrite).
-- Worker caches are keyed by the index's incarnation, an id minted on
-  every ``reset()``/``rebuild()``: a rebuilt index rewrites
-  ``bands_b00000.parquet`` under the same name, and a warm worker must
-  not serve the old contents.
+- ``admit()`` writes immutable per-bucket deltas and stages them;
+  ``commit()`` publishes them AFTER the caller's own corpus commit, so
+  a crashed batch can never flag future documents as dups of
+  documents that were never stored. ``compact()`` folds each bucket's
+  chain into one bkey-sorted base file (per-bucket, incremental —
+  never a global rewrite).
 
 Recall contract: a probe pair is verified with
 ``n_eq >= ceil(threshold * num_hashes)`` equal signature components.
@@ -66,11 +65,7 @@ task.
 
 from __future__ import annotations
 
-import json
 import math
-import os
-import re
-import shutil
 from collections import OrderedDict
 
 import numpy as np
@@ -78,23 +73,10 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from .seen_index import (
-    LocalBucketStorage,
-    _atomic_write,
-    _load_chain,
-    _manifest_incarnation,
-    _new_incarnation,
-)
+from .seen_index import DeltaChainIndex, _load_chain
 
-_FORMAT = "neardup-bands-v1"
 _BUCKET_COL = "__ndx_bucket"
 
 # worker-local probe cache of bkey-sorted bucket chains (_load_chain)
@@ -141,7 +123,7 @@ def _load_bands(
     )
 
 
-class NearDupIndex:
+class NearDupIndex(DeltaChainIndex):
     """Bucketed, persistent MinHash band index (see module docstring).
 
     Lifecycle per batch::
@@ -152,10 +134,15 @@ class NearDupIndex:
         idx.admit(fresh, batch_no); idx.commit()
 
     Geometry (num_hashes / rows_per_band / k / num_buckets) is pinned
-    in the manifest; a mismatch drops and rebuilds the index — like the
-    SeenIndex it is a rebuildable CACHE over the admitted corpus
+    in the manifest; a mismatch drops the index with a warning — like
+    the SeenIndex it is a rebuildable CACHE over the admitted corpus
     (``rebuild``), never the corpus of record.
     """
+
+    _FORMAT = "neardup-bands-v1"
+    _SEQ_KEY = "batch"
+    _DELTA_PREFIX = "bands_b"
+    _BASE_PREFIX = "bands_base_b"
 
     def __init__(
         self,
@@ -168,71 +155,23 @@ class NearDupIndex:
     ) -> None:
         if num_hashes % rows_per_band != 0:
             raise ValueError("num_hashes must be divisible by rows_per_band")
-        self.root = root
-        self.storage = storage if storage is not None else LocalBucketStorage(root)
         self.num_buckets = num_buckets
         self.num_hashes = num_hashes
         self.rows_per_band = rows_per_band
         self.n_bands = num_hashes // rows_per_band
         self.k = k
-        os.makedirs(root, exist_ok=True)
-        self._manifest = self._load_manifest()
-        self._incarnation = _manifest_incarnation(self._manifest)
-        geo = {
-            "num_buckets": num_buckets,
-            "num_hashes": num_hashes,
-            "rows_per_band": rows_per_band,
-            "k": k,
-        }
-        if self._manifest and (
-            self._manifest.get("format") != _FORMAT
-            or {g: self._manifest.get(g) for g in geo} != geo
-        ):
-            # destructive: a geometry/format mismatch re-routes every
-            # band, so the persisted index is unusable — but dropping
-            # hours of admitted state silently on a typo'd parameter is
-            # a footgun (ADVICE r5): name the mismatch before reset
-            import logging
+        super().__init__(
+            root,
+            storage,
+            {
+                "num_buckets": num_buckets,
+                "num_hashes": num_hashes,
+                "rows_per_band": rows_per_band,
+                "k": k,
+            },
+        )
 
-            diffs = {
-                g: (self._manifest.get(g), geo[g])
-                for g in geo
-                if self._manifest.get(g) != geo[g]
-            }
-            if self._manifest.get("format") != _FORMAT:
-                diffs["format"] = (self._manifest.get("format"), _FORMAT)
-            logging.getLogger(__name__).warning(
-                "NearDupIndex at %s: geometry/format mismatch %s — "
-                "dropping the persisted index and starting empty "
-                "(manifest value, requested value)",
-                root, diffs,
-            )
-            self.reset()
-        self._pending: dict[str, dict] | None = None
-        self._pending_batch: int | None = None
-
-    # -- manifest ----------------------------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, "manifest.json")
-
-    def _load_manifest(self) -> dict | None:
-        p = self._manifest_path()
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    @property
-    def committed_batch(self) -> int | None:
-        return self._manifest["batch"] if self._manifest else None
-
-    def reset(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
-        os.makedirs(self.root, exist_ok=True)
-        self._manifest = None
-        self._incarnation = _new_incarnation()
-        self._pending = None
-        self._pending_batch = None
+    committed_batch = DeltaChainIndex._committed
 
     # -- shared plan fragments ----------------------------------------------
     def _band_rows(self, df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -420,7 +359,7 @@ class NearDupIndex:
             )
         )
 
-    # -- admit / commit -------------------------------------------------------
+    # -- admit / maintain -----------------------------------------------------
     def admit(
         self,
         df: DataFrame,
@@ -431,73 +370,19 @@ class NearDupIndex:
         """Index one batch's documents (the caller's post-probe
         survivors). One task per touched bucket writes an immutable
         ``bands_b{N}.parquet`` delta; untouched buckets are not
-        rewritten. Staged until ``commit()``. Returns band rows
-        written."""
-        storage = self.storage
+        rewritten. Staged until ``commit()``; a replayed batch (a
+        streaming foreachBatch retry) rewrites the same delta and keeps
+        its chain entry unique. Returns band rows written."""
         H = self.num_hashes
-        bands = self._band_rows(df, text_col, id_col)
-        out_schema = StructType(
-            [
-                StructField("bucket", IntegerType()),
-                StructField("n", LongType()),
-                StructField("delta_file", StringType()),
-            ]
-        )
 
-        def _write(pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(pdf[_BUCKET_COL].iloc[0])
-            name = f"bands_b{batch_no:05d}.parquet"
-            cols = {
-                "bkey": pdf["bkey"].to_numpy(),
-                "id": pdf["id"].to_numpy(),
-            }
+        def _write(storage, b: int, delta: str, pdf: pd.DataFrame) -> dict:
+            cols = {"bkey": pdf["bkey"].to_numpy(), "id": pdf["id"].to_numpy()}
             for c in _sig_cols(H):
                 cols[c] = pdf[c].to_numpy()
-            _write_band_table(storage, b, name, cols)
-            return pd.DataFrame(
-                {"bucket": [b], "n": [len(pdf)], "delta_file": [name]}
-            )
+            _write_band_table(storage, b, delta, cols)
+            return {}
 
-        rows = bands.groupBy(_BUCKET_COL).applyInPandas(_write, out_schema).collect()
-        buckets_meta = (self._manifest or {}).get("buckets", {})
-        pending = {b: dict(v) for b, v in buckets_meta.items()}
-        n_total = 0
-        for r in rows:
-            b = str(r["bucket"])
-            ent = pending.get(b, {"deltas": []})
-            chain = list(ent.get("deltas", []))
-            # replayed batch (streaming foreachBatch retry): the delta
-            # file was atomically rewritten with the same row set —
-            # keep the chain entry unique so the fold stays idempotent
-            if r["delta_file"] not in chain:
-                chain.append(r["delta_file"])
-            ent["deltas"] = chain
-            pending[b] = ent
-            n_total += r["n"]
-        self._pending = pending
-        self._pending_batch = batch_no
-        return n_total
-
-    def commit(self) -> None:
-        """Atomically publish the staged batch (tiny driver-side JSON).
-        Call AFTER the caller's corpus commit — probes serve the last
-        committed manifest only."""
-        if self._pending is None:
-            return
-        manifest = {
-            "batch": self._pending_batch,
-            "format": _FORMAT,
-            "num_buckets": self.num_buckets,
-            "num_hashes": self.num_hashes,
-            "rows_per_band": self.rows_per_band,
-            "k": self.k,
-            "incarnation": self._incarnation,
-            "buckets": self._pending,
-        }
-        _atomic_write(self._manifest_path(), json.dumps(manifest).encode())
-        self._manifest = manifest
-        self._pending = None
-        self._pending_batch = None
+        return self._add(self._band_rows(df, text_col, id_col), _BUCKET_COL, batch_no, _write)
 
     def rebuild(self, df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> None:
         """Recovery / geometry change: drop and re-index the admitted
@@ -506,86 +391,15 @@ class NearDupIndex:
         self.admit(df, 0, text_col=text_col, id_col=id_col)
         self.commit()
 
-    # -- maintenance ------------------------------------------------------------
     @staticmethod
-    def _compact_bucket(
-        storage, incarnation: str, bucket: int, chain: list[str], base_name: str,
-        num_hashes: int,
-    ) -> None:
-        """Fold ONE bucket's delta chain into a bkey-sorted base file —
-        runs inside an executor task, all I/O through the storage seam.
-
-        Crash safety (ADVICE r5, medium): write-only — superseded chain
-        files are garbage-collected by ``compact()`` only AFTER the new
-        manifest is published, so a crash or Spark task retry anywhere
-        in here leaves the committed manifest's chain fully readable
-        and the task idempotent (a retry re-reads the still-present
-        chain and rewrites the same base)."""
-        bkey, ids, sigs = _load_bands(
-            storage, incarnation, bucket, tuple(chain), num_hashes
-        )
-        cols = {"bkey": bkey, "id": ids}
-        for j, c in enumerate(_sig_cols(num_hashes)):
-            cols[c] = sigs[:, j].copy()
-        _write_band_table(storage, bucket, base_name, cols)
-
-    def compact(self, spark) -> None:
-        """Fold each bucket's delta chain into one bkey-sorted base
-        file (per-bucket and incremental, through the storage seam —
-        never a global rewrite) as ONE DISTRIBUTED job, one task per
-        bucket (same shape as ``admit`` — nothing bucket-sized touches
-        the driver). Probe caches key on the chain, so a compacted
-        chain misses once and reloads one file."""
-        if not self._manifest:
+    def _fold_bucket(storage, bucket: int, entry: dict, base: str | None) -> None:
+        """Compaction task for ONE bucket: fold its delta chain into the
+        bkey-sorted ``base`` file (None when the chain is one file
+        already). Write-only, so a crashed or retried task leaves the
+        committed chain readable and the rewrite idempotent."""
+        if base is None:
             return
-        H = self.num_hashes
-        batch = self._manifest["batch"]
-        buckets = self._manifest["buckets"]
-        base = f"bands_base_b{batch:05d}.parquet"
-        work = [
-            (int(b), list(ent.get("deltas", [])))
-            for b, ent in buckets.items()
-            if len(ent.get("deltas", [])) > 1
-        ]
-        if work:
-            storage = self.storage
-            incarnation = self._incarnation
-            compact_one = NearDupIndex._compact_bucket
-
-            def _task(pdf: pd.DataFrame) -> pd.DataFrame:
-                for row in pdf.itertuples(index=False):
-                    compact_one(
-                        storage, incarnation, int(row.bucket),
-                        json.loads(row.chain), base, H,
-                    )
-                return pdf[["bucket"]]
-
-            spark.createDataFrame(
-                [(b, json.dumps(ch)) for b, ch in work],
-                "bucket int, chain string",
-            ).repartition(len(work), F.col("bucket")).groupBy("bucket").applyInPandas(
-                _task,
-                StructType([StructField("bucket", IntegerType())]),
-            ).count()
-        # two-phase publish (ADVICE r5, medium): bases are written
-        # above; commit the manifest pointing at [base] FIRST, and only
-        # then GC the now-unreferenced chain files. A crash before the
-        # publish leaves the old manifest + intact chains; a crash
-        # during GC leaves unreferenced band files that the sweep below
-        # removes on the next compaction (every bands file at or below
-        # the compacted batch that the new manifest does not reference).
-        for b, _ch in work:
-            buckets[str(b)]["deltas"] = [base]
-        manifest = dict(self._manifest)
-        manifest["buckets"] = buckets
-        _atomic_write(self._manifest_path(), json.dumps(manifest).encode())
-        self._manifest = manifest
-        bands_re = re.compile(r"^bands(?:_base)?_b(\d+)\.parquet$")
-        for b, _ch in work:
-            live = set(buckets[str(b)].get("deltas", []))
-            for name in self.storage.list_bucket(b):
-                m_f = bands_re.match(name)
-                # never touch files from batches NEWER than the
-                # compacted manifest batch (staged-but-uncommitted)
-                if m_f and int(m_f.group(1)) <= batch and name not in live:
-                    self.storage.remove(b, name)
+        parts = [_read_band_table(storage, bucket, d) for d in entry["deltas"]]
+        cols = {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
+        order = np.argsort(cols["bkey"], kind="stable")
+        _write_band_table(storage, bucket, base, {c: v[order] for c, v in cols.items()})

@@ -60,13 +60,16 @@ only the newest delta).
 The index is a rebuildable cache over the committed ``seen`` table:
 the manifest is committed by the driver only after the round's store
 commits succeed, and resume-from-checkpoint rebuilds the index from
-the seen snapshot when the manifest round disagrees (same recovery
-contract the round-1/2 driver-resident blooms had).
+the seen snapshot when the manifest round disagrees. That lifecycle
+(manifest, format/geometry check, staged chains, atomic commit,
+two-phase per-bucket compaction) is ``DeltaChainIndex``, which the
+NearDupIndex (operators/neardup_index.py) shares.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import shutil
@@ -87,7 +90,6 @@ from pyspark.sql.types import (
 
 from ..schemas import KIND_DISCOVERED
 
-_FORMAT = 3  # v3: deltas carry the link-state kind (state lookups served here)
 # manifests written before the incarnation id existed read as this one
 _DEFAULT_INCARNATION = "0"
 _K_HASHES = 7  # bloom hash count, optimal for ~1% fp
@@ -96,6 +98,8 @@ _BUCKET_COL = "_si_bucket"
 _H1_COL = "_si_h1"
 _H2_COL = "_si_h2"
 _KIND_COL = "_si_kind"
+
+log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # per-worker caches (live in the reused Python worker processes; an
@@ -348,6 +352,188 @@ class LocalBucketStorage:
             pass
 
 
+class DeltaChainIndex:
+    """The lifecycle both bucket indexes share (``SeenIndex``,
+    ``NearDupIndex``): each bucket holds a chain of immutable delta
+    files, and one small manifest under ``root`` names every bucket's
+    chain. A subclass sets ``_FORMAT``, ``_SEQ_KEY`` (the manifest key
+    of the committed round or batch), the file prefixes
+    ``_DELTA_PREFIX``/``_BASE_PREFIX`` (files are named
+    ``{prefix}{seq:05d}.parquet``) and ``_fold_bucket``, and indexes
+    rows through ``_add``.
+
+    - The manifest records the format, the geometry and the index's
+      incarnation. A manifest whose format or geometry differs from the
+      requested one is dropped, with a warning that names each
+      mismatched value: a different geometry re-routes every key, and
+      the index is a rebuildable cache over its source table, never the
+      record.
+    - ``_add`` writes deltas and stages the chains; ``commit`` publishes
+      them atomically, AFTER the caller's own commit. Probes serve the
+      last committed manifest only, so a crashed round or batch never
+      becomes visible.
+    - ``compact`` is two-phase: its tasks only write base files, the
+      manifest naming them is published next, and only then are the
+      superseded files removed. A crash before the publish leaves the
+      old manifest and its intact chains; a crash during the removal
+      leaves unreferenced files, which the next compaction sweeps.
+    """
+
+    _FORMAT: object
+    _SEQ_KEY: str
+    _DELTA_PREFIX: str
+    _BASE_PREFIX: str
+
+    def __init__(
+        self,
+        root: str,
+        storage: LocalBucketStorage | None,
+        geometry: dict,
+        pinned: dict | None = None,
+    ) -> None:
+        """``geometry`` and ``pinned`` values are both recorded in the
+        manifest; only a ``geometry`` mismatch drops the index here, a
+        ``pinned`` one is the subclass's to judge."""
+        self.root = root
+        self.storage = storage if storage is not None else LocalBucketStorage(root)
+        self._fields = {**(pinned or {}), **geometry}
+        os.makedirs(root, exist_ok=True)
+        self._manifest = self._load_manifest()
+        self._incarnation = _manifest_incarnation(self._manifest)
+        self._pending: dict[str, dict] | None = None
+        self._pending_seq: int | None = None
+        if self._manifest:
+            wanted = {"format": self._FORMAT, **geometry}
+            stale = {
+                k: (self._manifest.get(k), v)
+                for k, v in wanted.items()
+                if self._manifest.get(k) != v
+            }
+            if stale:
+                log.warning(
+                    "%s at %s: format/geometry mismatch %s (manifest value, "
+                    "requested value): dropping the index, which starts empty "
+                    "until it is rebuilt",
+                    type(self).__name__, root, stale,
+                )
+                self.reset()
+
+    def _manifest_path(self) -> str:
+        return os.path.join(self.root, "manifest.json")
+
+    def _load_manifest(self) -> dict | None:
+        p = self._manifest_path()
+        if not os.path.exists(p):
+            return None
+        with open(p) as f:
+            return json.load(f)
+
+    @property
+    def _committed(self) -> int | None:
+        return self._manifest[self._SEQ_KEY] if self._manifest else None
+
+    def reset(self) -> None:
+        shutil.rmtree(self.root, ignore_errors=True)
+        os.makedirs(self.root, exist_ok=True)
+        self._manifest = None
+        self._incarnation = _new_incarnation()
+        self._pending = None
+        self._pending_seq = None
+
+    def _add(self, df: DataFrame, bucket_col: str, seq: int, write, fields=()) -> int:
+        """Index ``df`` as round/batch ``seq`` in one distributed job:
+        one task per touched bucket calls ``write(storage, bucket,
+        delta_name, pdf)``, which writes the bucket's delta file and
+        returns the values of the manifest-entry ``fields`` it set.
+        Buckets with no rows are untouched. The new chains are staged
+        until ``commit``; a chain entry stays unique, because a replayed
+        round or batch rewrites its delta under the same name. Returns
+        the number of rows written."""
+        storage = self.storage
+        delta = f"{self._DELTA_PREFIX}{seq:05d}.parquet"
+
+        def _task(pdf: pd.DataFrame) -> pd.DataFrame:
+            b = int(pdf[bucket_col].iloc[0])
+            values = write(storage, b, delta, pdf)
+            return pd.DataFrame(
+                {"bucket": [b], "n": [len(pdf)], **{f: [values[f]] for f in fields}}
+            )
+
+        schema = StructType(
+            [StructField("bucket", IntegerType()), StructField("n", LongType())]
+            + [StructField(f, StringType()) for f in fields]
+        )
+        rows = df.groupBy(bucket_col).applyInPandas(_task, schema).collect()
+        pending = {b: dict(v) for b, v in (self._manifest or {}).get("buckets", {}).items()}
+        for r in rows:
+            ent = pending.setdefault(str(r["bucket"]), {})
+            ent.update({f: r[f] for f in fields})
+            chain = ent.get("deltas", [])
+            ent["deltas"] = chain if delta in chain else chain + [delta]
+        self._pending = pending
+        self._pending_seq = seq
+        return sum(r["n"] for r in rows)
+
+    def commit(self) -> None:
+        """Atomically publish the staged chains (driver-side, tiny
+        JSON). Call AFTER the caller's own tables committed."""
+        if self._pending is None:
+            return
+        manifest = {
+            self._SEQ_KEY: self._pending_seq,
+            "format": self._FORMAT,
+            **self._fields,
+            "incarnation": self._incarnation,
+            "buckets": self._pending,
+        }
+        _atomic_write(self._manifest_path(), json.dumps(manifest).encode())
+        self._manifest = manifest
+        self._pending = None
+        self._pending_seq = None
+
+    def compact(self, spark) -> None:
+        """Fold each bucket's delta chain into one base file as ONE
+        distributed job, one ``_fold_bucket`` task per bucket (nothing
+        bucket-sized touches the driver). A task only writes; the
+        manifest naming the bases is published before any superseded
+        file is removed. The sweep then removes every chain file at or
+        below the compacted round/batch that the manifest does not name
+        (newer files may be staged but uncommitted), so orphans of an
+        interrupted sweep go on the next compaction. Probe caches key
+        on the chain, so a compacted chain misses once and reloads one
+        file."""
+        if not self._manifest:
+            return
+        seq = self._manifest[self._SEQ_KEY]
+        base = f"{self._BASE_PREFIX}{seq:05d}.parquet"
+        buckets = self._manifest["buckets"]
+        if buckets:
+            storage, fold = self.storage, self._fold_bucket
+
+            def _task(pdf: pd.DataFrame) -> pd.DataFrame:
+                for b, entry in zip(pdf["bucket"], pdf["entry"]):
+                    entry = json.loads(entry)
+                    fold(storage, int(b), entry, base if len(entry["deltas"]) > 1 else None)
+                return pdf[["bucket"]]
+
+            spark.createDataFrame(
+                [(int(b), json.dumps(ent)) for b, ent in buckets.items()],
+                "bucket int, entry string",
+            ).repartition(len(buckets), F.col("bucket")).groupBy("bucket").applyInPandas(
+                _task, StructType([StructField("bucket", IntegerType())])
+            ).count()
+        for ent in buckets.values():
+            if len(ent["deltas"]) > 1:
+                ent["deltas"] = [base]
+        _atomic_write(self._manifest_path(), json.dumps(self._manifest).encode())
+        chain_re = re.compile(rf"^(?:{self._DELTA_PREFIX}|{self._BASE_PREFIX})(\d+)\.parquet$")
+        for b, ent in buckets.items():
+            for name in self.storage.list_bucket(int(b)):
+                m = chain_re.match(name)
+                if m and int(m.group(1)) <= seq and name not in ent["deltas"]:
+                    self.storage.remove(int(b), name)
+
+
 def _hash_cols(col):
     """The index's key triple, all JVM-side: bucket routing uses
     Spark's own hash-partitioning function (murmur3 via F.hash, the
@@ -360,9 +546,9 @@ def _hash_cols(col):
     )
 
 
-class SeenIndex:
+class SeenIndex(DeltaChainIndex):
     """Bucketed membership + state index under ``root`` (one dir per
-    bucket).
+    bucket), on the ``DeltaChainIndex`` lifecycle.
 
     Lifecycle per round: ``add_urls`` (distributed Spark job; executors
     write bloom + delta files for their buckets) -> the engine commits
@@ -372,6 +558,11 @@ class SeenIndex:
     indexed but not committed.
     """
 
+    _FORMAT = 3  # v3: deltas carry the link-state kind (state lookups served here)
+    _SEQ_KEY = "round"
+    _DELTA_PREFIX = "hashes_r"
+    _BASE_PREFIX = "hashes_base_r"
+
     def __init__(
         self,
         root: str,
@@ -379,78 +570,35 @@ class SeenIndex:
         bloom_bits: int = 1 << 20,
         storage: LocalBucketStorage | None = None,
     ) -> None:
-        self.root = root
-        self.storage = storage if storage is not None else LocalBucketStorage(root)
         self.num_buckets = num_buckets
         self.bloom_bits = bloom_bits
-        os.makedirs(root, exist_ok=True)
-        self._manifest = self._load_manifest()
-        self._incarnation = _manifest_incarnation(self._manifest)
-        # ordering matters: the format check runs FIRST so a stale
-        # on-disk format auto-migrates even when its geometry also
-        # differs (an old manifest must never reach the geometry
-        # checks below)
-        if self._manifest and self._manifest.get("format") != _FORMAT:
-            # on-disk format from an older engine version: the index is
-            # a rebuildable CACHE over the committed seen table, so
-            # auto-migrate by dropping it — committed_round becomes
-            # None, which the engine's resume path already treats as
-            # "rebuild from the seen snapshot" (plans/crawl.py)
-            self.reset()
-        if self._manifest and self._manifest.get("num_buckets") != num_buckets:
-            # a different bucket count re-routes every URL: probing old
-            # bucket files under the new routing would miss seen URLs
-            # (silent re-crawls). Like a format change, drop the cache
-            # and let resume rebuild under the requested geometry
-            # (bench/tools legitimately derive B from the session's
-            # shuffle-partition count, which varies across runs).
-            self.reset()
+        # a stale format or bucket count drops the index first (resume
+        # rebuilds it from the seen snapshot); only a manifest that
+        # survives that is held to the bloom size
+        super().__init__(
+            root, storage, {"num_buckets": num_buckets}, pinned={"bloom_bits": bloom_bits}
+        )
         if self._manifest and self._manifest["bloom_bits"] != bloom_bits:
             raise ValueError(
                 f"seen-index bloom geometry mismatch: manifest m="
                 f"{self._manifest['bloom_bits']} vs requested {bloom_bits} "
                 "(bitmaps of different m are position-incompatible)"
             )
-        self._pending: dict[str, dict] | None = None
-        self._pending_round: int | None = None
 
-    # -- manifest ----------------------------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.root, "manifest.json")
-
-    def _load_manifest(self) -> dict | None:
-        p = self._manifest_path()
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    @property
-    def committed_round(self) -> int | None:
-        return self._manifest["round"] if self._manifest else None
-
-    def reset(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)
-        os.makedirs(self.root, exist_ok=True)
-        self._manifest = None
-        self._incarnation = _new_incarnation()
-        self._pending = None
-        self._pending_round = None
+    committed_round = DeltaChainIndex._committed
 
     # -- build / maintain --------------------------------------------------
     def add_urls(self, df: DataFrame, round_no: int) -> int:
         """Index one round's state rows (columns ``url`` [+ ``kind``];
         a missing kind column means Discovered — pure membership use).
         Distributed: one task per touched bucket reads that bucket's
-        current bitmap, ORs in the new URLs' bits, writes an immutable
-        ``bloom_r{N}`` bitmap + a ``hashes_r{N}.parquet`` delta (two
-        int64 hash columns + kind, never URL strings), and returns one
-        tiny summary row. A URL already indexed may appear again with a
-        new kind: the chain fold makes the newest kind win (the merge-
-        operator semantics). Buckets with no rows are untouched (their
-        files are not rewritten). Returns the number of URLs staged."""
+        current bitmap, ORs in the new URLs' bits, and writes an
+        immutable ``bloom_r{N}`` bitmap + a ``hashes_r{N}.parquet``
+        delta (two int64 hash columns + kind, never URL strings). A URL
+        already indexed may appear again with a new kind: the chain
+        fold makes the newest kind win (the merge-operator semantics).
+        Returns the number of URLs staged."""
         m = self.bloom_bits
-        storage = self.storage
         buckets_meta = (self._manifest or {}).get("buckets", {})
         cur_blooms = {int(b): v["bloom"] for b, v in buckets_meta.items()}
 
@@ -463,17 +611,7 @@ class SeenIndex:
             F.pmod(F.hash("url"), F.lit(self.num_buckets)).cast("int").alias(_BUCKET_COL),
         )
 
-        out_schema = StructType(
-            [
-                StructField("bucket", IntegerType()),
-                StructField("n", LongType()),
-                StructField("bloom_file", StringType()),
-                StructField("delta_file", StringType()),
-            ]
-        )
-
-        def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(pdf[_BUCKET_COL].iloc[0])
+        def _write(storage, b: int, delta: str, pdf: pd.DataFrame) -> dict:
             prev = cur_blooms.get(b)
             if prev is not None:
                 bits = np.frombuffer(
@@ -486,50 +624,16 @@ class SeenIndex:
                 np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
             bloom_name = f"bloom_r{round_no:05d}.bin"
             storage.write_bytes(b, bloom_name, bits.tobytes())
-            delta_name = f"hashes_r{round_no:05d}.parquet"
             storage.write_pairs(
                 b,
-                delta_name,
+                delta,
                 pdf[_H1_COL].to_numpy(),
                 pdf[_H2_COL].to_numpy(),
                 pdf[_KIND_COL].to_numpy(),
             )
-            return pd.DataFrame(
-                {"bucket": [b], "n": [len(pdf)],
-                 "bloom_file": [bloom_name], "delta_file": [delta_name]}
-            )
+            return {"bloom": bloom_name}
 
-        rows = hashed.groupBy(_BUCKET_COL).applyInPandas(_build, out_schema).collect()
-        pending = {b: dict(v) for b, v in buckets_meta.items()}
-        n_total = 0
-        for r in rows:
-            b = str(r["bucket"])
-            ent = pending.get(b, {"bloom": None, "deltas": []})
-            ent["bloom"] = r["bloom_file"]
-            ent["deltas"] = list(ent.get("deltas", [])) + [r["delta_file"]]
-            pending[b] = ent
-            n_total += r["n"]
-        self._pending = pending
-        self._pending_round = round_no
-        return n_total
-
-    def commit(self) -> None:
-        """Atomically publish the staged round (driver-side, tiny JSON).
-        Call AFTER the round's store tables committed."""
-        if self._pending is None:
-            return
-        manifest = {
-            "round": self._pending_round,
-            "format": _FORMAT,
-            "bloom_bits": self.bloom_bits,
-            "num_buckets": self.num_buckets,
-            "incarnation": self._incarnation,
-            "buckets": self._pending,
-        }
-        _atomic_write(self._manifest_path(), json.dumps(manifest).encode())
-        self._manifest = manifest
-        self._pending = None
-        self._pending_round = None
+        return self._add(hashed, _BUCKET_COL, round_no, _write, ("bloom",))
 
     def rebuild(self, seen_urls: DataFrame, round_no: int) -> None:
         """Recovery: drop and re-index from the committed seen table
@@ -540,91 +644,25 @@ class SeenIndex:
         self.commit()
 
     @staticmethod
-    def _compact_bucket(
-        storage, bucket: int, deltas: list[str], base_name: str, live_bloom: str
-    ) -> None:
-        """Fold ONE bucket's delta chain into a deduped base file and
-        GC its superseded bloom bitmaps — runs inside an executor task,
-        all I/O through the storage seam.
-
-        Crash safety (ADVICE r5, medium): this phase only WRITES the
-        new base — superseded delta files are garbage-collected by
-        ``compact()`` AFTER the updated manifest is published, so a
-        crash or retried task anywhere in here leaves the committed
-        manifest's whole chain readable (and the task idempotent: a
-        retry re-reads the still-present chain and rewrites the same
-        base). Bloom GC stays here because the manifest references
-        exactly one bitmap per bucket (``live_bloom``), which is
-        always kept."""
-        if len(deltas) > 1:
-            parts = [storage.read_pairs(bucket, d) for d in deltas]
+    def _fold_bucket(storage, bucket: int, entry: dict, base: str | None) -> None:
+        """Compaction task for ONE bucket: fold its delta chain into the
+        deduped ``base`` file (latest kind per pair — the chain fold
+        burned in; None when the chain is one file already), then GC
+        superseded bloom bitmaps, keeping the newest ``_KEEP_BLOOMS``
+        and always the manifest's live one. Write-only for the chain,
+        so a crashed or retried task leaves the committed chain
+        readable and the rewrite idempotent."""
+        if base is not None:
+            parts = [storage.read_pairs(bucket, d) for d in entry["deltas"]]
             folded = _dedup_last(*(np.concatenate(cols) for cols in zip(*parts)))
-            storage.write_pairs(bucket, base_name, *folded)
-        # GC superseded bloom bitmaps (keep the newest few)
+            storage.write_pairs(bucket, base, *folded)
         blooms = sorted(
             f for f in storage.list_bucket(bucket)
             if f.startswith("bloom_r") and f.endswith(".bin")
         )
         for f_old in blooms[:-_KEEP_BLOOMS]:
-            if f_old != live_bloom:
+            if f_old != entry["bloom"]:
                 storage.remove(bucket, f_old)
-
-    def compact(self, spark) -> None:
-        """Fold each bucket's delta chain into one deduped file (latest
-        kind per pair — the chain fold burned in) and GC stale bloom
-        bitmaps, as ONE DISTRIBUTED job with one task per bucket (the
-        same per-bucket task shape as ``add_urls``: nothing
-        bucket-sized touches the driver). Probe caches key on the
-        chain, so a compacted chain simply misses once and reloads one
-        file."""
-        if not self._manifest:
-            return
-        storage = self.storage
-        rnd = self._manifest["round"]
-        work = []  # (bucket, deltas, base_name, live bloom)
-        for b, ent in self._manifest["buckets"].items():
-            work.append(
-                (int(b), list(ent.get("deltas", [])),
-                 f"hashes_base_r{rnd:05d}.parquet", ent["bloom"])
-            )
-        if work:
-            compact_one = SeenIndex._compact_bucket
-
-            def _task(pdf: pd.DataFrame) -> pd.DataFrame:
-                for row in pdf.itertuples(index=False):
-                    compact_one(
-                        storage, int(row.bucket), json.loads(row.deltas),
-                        row.base_name, row.bloom,
-                    )
-                return pdf[["bucket"]]
-
-            spark.createDataFrame(
-                [(b, json.dumps(ds), bn, bl) for b, ds, bn, bl in work],
-                "bucket int, deltas string, base_name string, bloom string",
-            ).repartition(len(work), F.col("bucket")).groupBy("bucket").applyInPandas(
-                _task, StructType([StructField("bucket", IntegerType())])
-            ).count()
-        # two-phase publish (ADVICE r5, medium): 1) bases written above,
-        # 2) commit the manifest pointing at [base] — only NOW are the
-        # old chains unreferenced — 3) GC superseded delta files. A
-        # crash before (2) leaves the old manifest + its intact chains;
-        # a crash during (3) leaves unreferenced files that the sweep
-        # below removes on the next compaction (it deletes every
-        # hashes file at or below the compacted round that the new
-        # manifest does not reference, so orphans cannot accumulate).
-        for b, ds, bn, _bl in work:
-            if len(ds) > 1:
-                self._manifest["buckets"][str(b)]["deltas"] = [bn]
-        _atomic_write(self._manifest_path(), json.dumps(self._manifest).encode())
-        hashes_re = re.compile(r"^hashes(?:_base)?_r(\d+)\.parquet$")
-        for b, _ds, _bn, _bl in work:
-            live = set(self._manifest["buckets"][str(b)].get("deltas", []))
-            for name in self.storage.list_bucket(b):
-                m_f = hashes_re.match(name)
-                # never touch files from rounds NEWER than the compacted
-                # manifest round (e.g. staged-but-uncommitted adds)
-                if m_f and int(m_f.group(1)) <= rnd and name not in live:
-                    self.storage.remove(b, name)
 
     # -- probe ---------------------------------------------------------------
     def _buckets_meta(self) -> dict[int, tuple[str, tuple[str, ...]]]:

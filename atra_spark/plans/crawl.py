@@ -15,7 +15,8 @@ Scale posture per round (10^10-frontier discipline, SURVEY.md §7):
   and no bitmap is ever broadcast or driver-resident
 - the index is maintained incrementally (each round appends one delta
   per touched bucket; compaction every k rounds — no rebuild scans)
-- candidate aggregation is salted two-phase (hot hosts / hot URLs)
+- candidate aggregation is one map-side-combined min aggregation
+  (hot URLs are pre-combined per map partition before the exchange)
 - admission is one JVM window function (``admit_window``), kept in
   whole-stage codegen; the applyInPandas ``schedule_hosts`` is the
   tested reference it must agree with, not an engine path
@@ -33,7 +34,6 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 from ..functions.extract import extract_pages_batch
 from ..functions.jvm_url import attach_origin
-from ..functions.url_udfs import canonicalize_udf, origin_udf
 from ..schemas import (
     DEPTH_COLS,
     KIND_DISCOVERED,
@@ -53,6 +53,7 @@ from ..operators.frontier import (
 )
 from ..operators.politeness import admit_window
 from ..operators.seen import aggregate_candidates
+from ..urlkit import canonicalize, origin
 
 
 def expand_links(res_read: DataFrame, rnd: int) -> tuple[DataFrame, DataFrame]:
@@ -210,18 +211,19 @@ class CrawlEngine:
     # ------------------------------------------------------------------
     def seed(self, seeds: list[str]) -> None:
         """Initialize frontier + seen + seed edges (seed/input/seed_data.rs:53-67)."""
-        spark = self.spark
-        seeds_df = (
-            spark.createDataFrame([(s,) for s in seeds], "url string")
-            # canonicalize rejects non-http(s)/unparseable seeds, matching
-            # the reference's UrlWithDepth parse at enqueue
-            # (seed/input/seed_data.rs:53-67)
-            .withColumn("url", canonicalize_udf(F.col("url")))
-            .filter(F.col("url").isNotNull())
-            .dropDuplicates(["url"])
-            .withColumn("host", origin_udf(F.col("url")))
-            .filter(F.col("host").isNotNull())
-        )
+        # canonicalize rejects non-http(s)/unparseable seeds, matching
+        # the reference's UrlWithDepth parse at enqueue
+        # (seed/input/seed_data.rs:53-67). The driver already holds the
+        # list, so it is cleaned here, into one partition (the seed edges
+        # are one file); row order cannot change an admission
+        # (admit_window orders by host, is_seed, round, url)
+        hosts: dict[str, str] = {}
+        for url in map(canonicalize, seeds):
+            if url is not None and url not in hosts and (host := origin(url)) is not None:
+                hosts[url] = host
+        seeds_df = self.spark.createDataFrame(
+            list(hosts.items()), "url string, host string"
+        ).coalesce(1)
         frontier = seeds_df.select(
             "url",
             "host",
@@ -496,7 +498,7 @@ class CrawlEngine:
             # pruning: only url + depth triple + links are read back) ----
             edges, expanded = expand_links(res_read, rnd)
 
-            # salted two-phase dedup to unique candidates w/ lowest depth
+            # dedup to unique candidates w/ lowest depth (map-side combine)
             candidates = aggregate_candidates(expanded)
 
             # ---- seen-set membership (the core operator): bucket-routed

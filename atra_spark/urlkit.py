@@ -9,9 +9,10 @@ Re-implements (from spec, not code) the reference URL semantics:
 - depth update rules                        (atra/src/url/url_with_depth.rs:69-110)
 - budget settings                           (atra/src/config/crawl.rs:366-470)
 
-Everything here is scalar Python used *inside* Arrow-batched pandas
-UDFs (atra_spark.functions.url_udfs) — never as row-at-a-time Spark
-UDFs.
+Everything here is scalar Python: called inside the Arrow-batched
+extraction kernel, and on the driver for seed lists
+(``CrawlEngine.seed``) — never as a row-at-a-time Spark UDF. The
+per-link origin path runs JVM-side (functions/jvm_url.py).
 """
 
 from __future__ import annotations

@@ -490,6 +490,28 @@ class TestFastParserEquivalence:
             self._assert_equal(frag, aggressive=True)
 
 
+def _raw_detect_scalar(
+    text: str, langs: tuple[str, ...] = None
+) -> tuple[str | None, float]:
+    """Reference Cavnar-Trenkle pass (pure-Python): the equivalence
+    oracle for the vectorized ``langdata._raw_detect``, which must
+    produce identical (language, confidence) on every input."""
+    from atra_spark.functions import langdata as L
+
+    doc = L._trigram_ranks(text[:1024])
+    if not doc:
+        return None, 0.0
+    max_rank = L._PROFILE_TOP
+    worst = len(doc) * max_rank
+    best_lang, best_dist = None, None
+    for lang in langs or L._PROFILED_LANGS:
+        prof = L._PROFILES[lang]
+        d = sum(abs(prof.get(g, max_rank) - r) for g, r in doc.items())
+        if best_dist is None or d < best_dist or (d == best_dist and lang < best_lang):
+            best_lang, best_dist = lang, d
+    return best_lang, (1.0 - (best_dist / worst) if worst else 0.0)
+
+
 class TestLangIdVectorizedEquivalence:
     """The numpy fast paths (script-count table, group rank-matrix
     distance) must be EXACTLY equivalent to the scalar reference
@@ -542,7 +564,7 @@ class TestLangIdVectorizedEquivalence:
         for text in self._texts():
             for g in groups:
                 fast = L._raw_detect(text, g)
-                ref = L._raw_detect_scalar(text, g)
+                ref = _raw_detect_scalar(text, g)
                 assert fast[0] == ref[0], (text[:40], fast, ref)
                 assert abs(fast[1] - ref[1]) < 1e-12, (text[:40], fast, ref)
 

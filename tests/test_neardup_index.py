@@ -5,6 +5,8 @@ stay correct across multi-batch delta chains, staged-vs-committed
 admission, repartitioned input, and compaction, and the warm probe
 path must read only the newest delta (the O(batch) economics)."""
 
+import json
+import logging
 import math
 
 from pyspark.sql import functions as F
@@ -134,18 +136,38 @@ class TestNearDupIndex:
         )
         assert _probe_set(idx.probe(batch)) == before
 
-    def test_geometry_change_resets(self, spark, tmp_path):
+    def test_geometry_change_resets(self, spark, tmp_path, caplog):
         root = str(tmp_path / "ndx")
         idx = NearDupIndex(root, num_buckets=8)
         idx.admit(_docs(spark, _corpus(0, 40)), 0)
         idx.commit()
-        re = NearDupIndex(root, num_buckets=4)  # re-routes every bkey
+        with caplog.at_level(logging.WARNING, logger="atra_spark.operators.seen_index"):
+            re = NearDupIndex(root, num_buckets=4)  # re-routes every bkey
         assert re.committed_batch is None
+        assert "'num_buckets': (8, 4)" in caplog.text
         re.rebuild(_docs(spark, _corpus(0, 40)))
         got = _probe_set(re.probe(_docs(spark, _corpus(100, 140))))
         want = _exhaustive(spark, _docs(spark, _corpus(100, 140)),
                            _docs(spark, _corpus(0, 40)))
         assert got == want
+
+    def test_current_manifest_opens_without_reset(self, tmp_path):
+        """A manifest in today's on-disk format keeps its batch and
+        files across a reopen."""
+        literal = (
+            '{"batch": 2, "format": "neardup-bands-v1", "num_buckets": 4, '
+            '"num_hashes": 8, "rows_per_band": 2, "k": 3, "incarnation": "9a1b", '
+            '"buckets": {"3": {"deltas": ["bands_base_b00001.parquet", '
+            '"bands_b00002.parquet"]}}}'
+        )
+        root = tmp_path / "ndx"
+        (root / "bucket=00003").mkdir(parents=True)
+        (root / "bucket=00003" / "bands_b00002.parquet").write_bytes(b"")
+        (root / "manifest.json").write_text(literal)
+        idx = NearDupIndex(str(root), num_buckets=4)
+        assert idx.committed_batch == 2
+        assert idx._manifest == json.loads(literal)
+        assert (root / "bucket=00003" / "bands_b00002.parquet").exists()
 
     def test_max_span_caps_hot_buckets(self, spark, tmp_path):
         """A cap bounds per-bucket compare work: results are a

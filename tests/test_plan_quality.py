@@ -87,18 +87,6 @@ class TestCandidateAggPlan:
         assert plan.count("HashAggregate") == 2
         assert plan.count("Exchange") == 1
 
-    def test_salted_two_phase_available(self, spark):
-        from atra_spark.operators.seen import aggregate_candidates
-
-        df = spark.createDataFrame(
-            [("https://h/x", "h", 1, 1, 1)],
-            "url string, host string, depth_on_website long, distance_to_seed long, total_distance_to_seed long",
-        )
-        plan = _plan(aggregate_candidates(df, num_salts=8), "simple")
-        # explicit salt layer (for holistic aggs): two aggregation
-        # levels, each with its own partial/final pair
-        assert plan.count("HashAggregate") >= 4
-
 
 class TestAlignedFrontierPath:
     """Round-3 frontier bandwidth diet: expand -> dedup-agg -> seen

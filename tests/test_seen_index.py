@@ -18,13 +18,23 @@ atra/src/recrawl_management/mod.rs:62 + link_state/db.rs):
 
 from __future__ import annotations
 
+import json
+import logging
+
 import numpy as np
 import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from atra_spark.operators.seen_index import SeenIndex
+from atra_spark.operators.neardup_index import NearDupIndex
+from atra_spark.operators.seen_index import (
+    LocalBucketStorage,
+    SeenIndex,
+    _hash_cols,
+    _latest_kinds,
+)
 from atra_spark.schemas import KIND_DISCOVERED, KIND_PROCESSED_AND_STORED
+from test_neardup_index import _corpus, _docs, _probe_set
 
 
 def filter_state(
@@ -57,6 +67,16 @@ def _cands_df(spark, urls):
         [(u, f"h{i % 3}.example", i % 4, i % 5, i) for i, u in enumerate(urls)],
         "url string, host string, depth_on_website long, "
         "distance_to_seed long, total_distance_to_seed long",
+    )
+
+
+def _probe_keys(spark, urls, num_buckets):
+    """(bucket, h1, h2) per URL, as the probe kernel receives them."""
+    return np.array(
+        _urls_df(spark, urls)
+        .select(F.pmod(F.hash("url"), F.lit(num_buckets)), *_hash_cols(F.col("url")))
+        .collect(),
+        dtype=np.int64,
     )
 
 
@@ -212,6 +232,32 @@ class TestFormatMigration:
         got = sorted(r["url"] for r in idx2.prune_new(_cands_df(spark, SEEN[:40])).collect())
         assert got == sorted(SEEN[20:40])
 
+    def test_current_manifest_opens_without_reset(self, spark, tmp_path):
+        """A manifest in today's on-disk format keeps its round, files
+        and key set across a reopen and the next commit."""
+        literal = (
+            '{"round": 4, "format": 3, "bloom_bits": 4096, "num_buckets": 4, '
+            '"incarnation": "5f0c9e", "buckets": {"1": {"bloom": "bloom_r00004.bin", '
+            '"deltas": ["hashes_base_r00003.parquet", "hashes_r00004.parquet"]}}}'
+        )
+        root = tmp_path / "si"
+        (root / "bucket=00001").mkdir(parents=True)
+        (root / "bucket=00001" / "bloom_r00004.bin").write_bytes(bytes(4096 // 8))
+        (root / "manifest.json").write_text(literal)
+        idx = SeenIndex(str(root), num_buckets=4, bloom_bits=4096)
+        assert idx.committed_round == 4
+        assert idx._manifest == json.loads(literal)
+        assert (root / "bucket=00001" / "bloom_r00004.bin").exists()
+        idx.add_urls(_urls_df(spark, SEEN[:40]), 5)
+        idx.commit()
+        m = json.loads((root / "manifest.json").read_text())
+        assert m.keys() == json.loads(literal).keys()
+        assert all(e.keys() == {"bloom", "deltas"} for e in m["buckets"].values())
+        assert m["incarnation"] == "5f0c9e"
+        assert m["buckets"]["1"]["deltas"][:2] == [
+            "hashes_base_r00003.parquet", "hashes_r00004.parquet"
+        ]
+
 
 class TestStateLookup:
     """v3: the index serves the dequeue link-state check
@@ -345,17 +391,20 @@ class TestStateLookup:
 
 
 class TestBucketGeometryMigration:
-    def test_num_buckets_mismatch_resets_for_rebuild(self, spark, tmp_path):
+    def test_num_buckets_mismatch_resets_for_rebuild(self, spark, tmp_path, caplog):
         """Reopening an index with a different bucket count must not
         serve stale routing (seen URLs would probe as new and be
-        re-crawled): the constructor drops the cache so the engine's
-        resume path rebuilds under the requested geometry."""
+        re-crawled): the constructor drops the cache, with a warning
+        naming the mismatch, so the engine's resume path rebuilds under
+        the requested geometry."""
         root = str(tmp_path / "si_nb")
         idx = SeenIndex(root, num_buckets=4, bloom_bits=1 << 12)
         idx.add_urls(_urls_df(spark, SEEN[:20]), 0)
         idx.commit()
-        idx2 = SeenIndex(root, num_buckets=8, bloom_bits=1 << 12)
+        with caplog.at_level(logging.WARNING, logger="atra_spark.operators.seen_index"):
+            idx2 = SeenIndex(root, num_buckets=8, bloom_bits=1 << 12)
         assert idx2.committed_round is None  # engine will rebuild()
+        assert "'num_buckets': (4, 8)" in caplog.text
         idx2.rebuild(_urls_df(spark, SEEN[:20]), 0)
         got = sorted(r["url"] for r in idx2.prune_new(_cands_df(spark, SEEN[:40])).collect())
         assert got == sorted(SEEN[20:40])
@@ -439,14 +488,12 @@ class TestStorageSeamAndDistributedCompact:
         assert all(kinds[u] == KIND_PROCESSED_AND_STORED for u in SEEN[:20])
         assert all(kinds[u] == KIND_DISCOVERED for u in SEEN[20:40])
 
-    def test_all_io_routes_through_storage(self, spark, tmp_path, monkeypatch):
+    def test_all_io_routes_through_storage(self, spark, tmp_path):
         """No direct file I/O outside the seam: a storage subclass that
-        counts calls sees every read the probe makes."""
-        from atra_spark.operators.seen_index import (
-            _BLOOM_CACHE,
-            _HASHSET_CACHE,
-            LocalBucketStorage,
-        )
+        counts calls sees both the bitmap and the hash-pair reads of a
+        cold probe. The probe kernel runs here, in the process that
+        holds the counters and the module caches."""
+        from atra_spark.operators.seen_index import _BLOOM_CACHE, _HASHSET_CACHE
 
         calls = {"read_bytes": 0, "read_pairs": 0}
 
@@ -466,64 +513,92 @@ class TestStorageSeamAndDistributedCompact:
         )
         idx.add_urls(_urls_df(spark, SEEN[:60]), 0)
         idx.commit()
+        keys = _probe_keys(spark, SEEN[:60] + NEW[:20], idx.num_buckets)
         _BLOOM_CACHE.clear()
         _HASHSET_CACHE.clear()
-        got = idx.prune_new(_cands_df(spark, SEEN[:60] + NEW[:20])).collect()
-        assert sorted(r["url"] for r in got) == sorted(NEW[:20])
-        # local[n]: the counting subclass instance is the one the tasks
-        # pickled, but the counters live per python worker — assert via
-        # a fresh driver-side probe instead
-        s1, s2, sk = idx.storage.read_pairs(0, idx._manifest["buckets"]["0"]["deltas"][0]) \
-            if "0" in idx._manifest["buckets"] else (None, None, None)
-        assert calls["read_pairs"] >= 1 or s1 is not None
+        kinds = _latest_kinds(
+            idx.storage, idx._incarnation, idx._buckets_meta(),
+            keys[:, 0], keys[:, 1], keys[:, 2],
+        )
+        assert (kinds[:60] >= 0).all() and (kinds[60:] < 0).all()
+        assert calls["read_bytes"] >= 1
+        assert calls["read_pairs"] >= 1
+
+
+class _SeenKind:
+    def open(self, root):
+        return SeenIndex(root, num_buckets=2, bloom_bits=1 << 14)
+
+    def add(self, spark, idx, seq):
+        idx.add_urls(_urls_df(spark, SEEN[seq * 50 : (seq + 1) * 50]), seq)
+
+    def answers(self, spark, idx):
+        got = sorted(
+            r["url"] for r in idx.prune_new(_cands_df(spark, SEEN[:150] + NEW)).collect()
+        )
+        assert got == sorted(NEW)
+        return got
+
+
+class _NearDupKind:
+    def open(self, root):
+        return NearDupIndex(root, num_buckets=2)
+
+    def add(self, spark, idx, seq):
+        idx.admit(_docs(spark, _corpus(seq * 100, seq * 100 + 40)), seq)
+
+    def answers(self, spark, idx):
+        got = _probe_set(idx.probe(_docs(spark, _corpus(500, 540))))
+        assert got, "the probe batch must near-dup the history"
+        return got
+
+
+@pytest.fixture(params=[_SeenKind, _NearDupKind], ids=["seen", "neardup"])
+def index_kind(request):
+    return request.param()
 
 
 class TestTwoPhaseCompaction:
     """ADVICE r5 (medium): compaction must publish the new manifest
     BEFORE deleting superseded chain files, so a crash mid-compaction
-    can never leave a committed manifest referencing deleted files."""
+    can never leave a committed manifest referencing deleted files.
+    Both indexes compact through the one ``DeltaChainIndex`` protocol."""
 
-    def test_bucket_fold_is_write_only(self, spark, tmp_path):
-        root = str(tmp_path / "si")
-        idx = SeenIndex(root, num_buckets=2, bloom_bits=1 << 14)
-        for rnd in range(3):
-            idx.add_urls(_urls_df(spark, SEEN[rnd * 50 : (rnd + 1) * 50]), rnd)
+    def test_bucket_fold_is_write_only(self, spark, tmp_path, index_kind):
+        root = str(tmp_path / "idx")
+        idx = index_kind.open(root)
+        for seq in range(3):
+            index_kind.add(spark, idx, seq)
             idx.commit()
+        want = index_kind.answers(spark, idx)
         # simulate the crash window: run ONLY the per-bucket fold (what
         # executor tasks do), no manifest publish, no GC
+        base = f"{idx._BASE_PREFIX}00002.parquet"
         for b, ent in idx._manifest["buckets"].items():
-            SeenIndex._compact_bucket(
-                idx.storage, int(b), list(ent["deltas"]),
-                "hashes_base_r00002.parquet", ent["bloom"],
-            )
+            type(idx)._fold_bucket(idx.storage, int(b), ent, base)
         # the committed manifest's chain files must all still exist -> a
         # fresh index over the same root probes correctly
-        idx2 = SeenIndex(root, num_buckets=2, bloom_bits=1 << 14)
-        got = sorted(
-            r["url"] for r in idx2.prune_new(_cands_df(spark, SEEN[:150] + NEW)).collect()
-        )
-        assert got == sorted(NEW)
+        for b, ent in idx._manifest["buckets"].items():
+            assert set(ent["deltas"]) <= set(idx.storage.list_bucket(int(b))), b
+        assert index_kind.answers(spark, index_kind.open(root)) == want
 
-    def test_gc_after_publish_leaves_no_orphans(self, spark, tmp_path):
-        root = str(tmp_path / "si")
-        idx = SeenIndex(root, num_buckets=2, bloom_bits=1 << 14)
-        for rnd in range(3):
-            idx.add_urls(_urls_df(spark, SEEN[rnd * 50 : (rnd + 1) * 50]), rnd)
+    def test_gc_after_publish_leaves_no_orphans(self, spark, tmp_path, index_kind):
+        root = str(tmp_path / "idx")
+        idx = index_kind.open(root)
+        for seq in range(3):
+            index_kind.add(spark, idx, seq)
             idx.commit()
+        want = index_kind.answers(spark, idx)
         # leave a stale pre-fold base around (the crash-between-publish-
         # and-GC artifact) and compact: the sweep must remove it
-        idx.storage.write_bytes(0, "hashes_base_r00000.parquet", b"junk")
+        idx.storage.write_bytes(0, f"{idx._BASE_PREFIX}00000.parquet", b"junk")
         idx.compact(spark)
         for b, ent in idx._manifest["buckets"].items():
             files = [
-                f for f in idx.storage.list_bucket(int(b))
-                if f.startswith("hashes")
+                f for f in idx.storage.list_bucket(int(b)) if f.endswith(".parquet")
             ]
             assert files == list(ent["deltas"])  # exactly the live base
-        got = sorted(
-            r["url"] for r in idx.prune_new(_cands_df(spark, SEEN[:150] + NEW)).collect()
-        )
-        assert got == sorted(NEW)
+        assert index_kind.answers(spark, idx) == want
 
 
 class TestWorkerCacheIncarnation:
@@ -534,20 +609,10 @@ class TestWorkerCacheIncarnation:
         answer from the old ones. The probe kernel runs here, in the
         process that holds the module caches, so the cache is
         certainly warm."""
-        from atra_spark.operators.seen_index import _hash_cols, _latest_kinds
-
         a = [f"https://a{i % 7}.example/p{i}" for i in range(200)]
         b = [f"https://b{i % 7}.example/p{i}" for i in range(200)]
         idx = SeenIndex(str(tmp_path / "si"), num_buckets=4, bloom_bits=1 << 12)
-        keys = np.array(
-            _urls_df(spark, a + b)
-            .select(
-                F.pmod(F.hash("url"), F.lit(idx.num_buckets)),
-                *_hash_cols(F.col("url")),
-            )
-            .collect(),
-            dtype=np.int64,
-        )
+        keys = _probe_keys(spark, a + b, idx.num_buckets)
 
         def indexed():
             kinds = _latest_kinds(
